@@ -12,7 +12,7 @@ parser, planner, optimizer, shuffle, or state store — Catalyst, Tungsten
 and the Structured Streaming state store provide all of it (SURVEY.md
 §4.2). Every batch operator is a declarative DataFrame plan; every
 streaming operator uses watermarks + built-in stateful operators (or
-``transformWithStateInPandas`` where the semantics demand arbitrary
+``applyInPandasWithState`` where the semantics demand arbitrary
 state, mirroring the reference's Processor-API dedup transformer).
 """
 

@@ -342,14 +342,15 @@ _R11_DRIVER_VERIFIED = frozenset(
 )
 
 # CORRECTNESS_r12: 49/50 green (the r12 reverify tier plus the stalest
-# rotation rows; dedup_text_minhash is the 50th — rows-only, no oracle).
+# rotation rows; dedup_text_minhash is the 50th — rows-only, no oracle,
+# so never green and not listed).
 _R12_DRIVER_VERIFIED = frozenset(
     {
         "agg_count_by_type", "agg_distinct_users_by_type",
         "agg_rollup_nation_region", "attribution_last_touch",
         "corpus_dup_inflation", "corpus_vocab_stats",
         "dedup_keep_by_source_priority", "dedup_text_editdistance",
-        "dedup_text_minhash", "dedup_text_ngram_jaccard",
+        "dedup_text_ngram_jaccard",
         "dedup_text_simhash", "doc_char_entropy", "doc_novelty_ngrams",
         "drift_report_ks_by_type", "drift_stream_psi", "dup_rate_by_source",
         "embedding_quantize_int8", "event_type_burstiness",

@@ -194,17 +194,15 @@ def test_foreach_batch_partitioned_upsert(spark):
 
 
 def test_custom_ttl_state_survives_restart(spark):
-    """D5 recovery: the applyInPandasWithState TTL dedup's per-key state
-    (last forwarded timestamp) must be RESTORED on restart — a repeat
-    inside the TTL that arrives in the second run is suppressed only if
-    the first run's state came back from the checkpoint."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    """D5 recovery: the TTL dedup's bucketed state (each key's last
+    forwarded timestamp) must be RESTORED on restart — a repeat inside
+    the TTL that arrives in the second run is suppressed only if the
+    first run's state came back from the checkpoint. Runs the query's
+    own plan (`dedup_ttl_stream`) with two keys in ONE state bucket:
+    neither key's TTL may leak into the other across the restart."""
     from minefields_kafka_streams_deduplication_spark.streaming.dedup_stream import (
-        DEDUP_TTL_OUTPUT_SCHEMA,
-        DEDUP_TTL_STATE_SCHEMA,
-        TTL_KEY,
-        _dedup_ttl_fn,
+        dedup_ttl_stream,
+        ttl_bucket,
     )
 
     schema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
@@ -213,35 +211,23 @@ def test_custom_ttl_state_survives_restart(spark):
     out = os.path.join(tempfile.mkdtemp(prefix="ttlrec_out_"), "sink")
     m = lambda minutes: T0 + dt.timedelta(minutes=minutes)
 
+    # Key B = (b, "a") shares key A = (7, "a")'s state bucket.
+    keys = spark.createDataFrame(
+        [(u, "a") for u in range(1, 500)], "user_id LONG, event_type STRING"
+    )
+    buckets = dict(keys.select("user_id", ttl_bucket()).collect())
+    b = next(u for u in buckets if u != 7 and buckets[u] == buckets[7])
+
     def write(fname, rows):
         spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
             os.path.join(src, fname)
         )
 
     def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .parquet(os.path.join(src, "*.parquet"))
-            .select(
-                "event_id",
-                F.unix_micros("ts").alias("ts_us"),
-                "user_id",
-                "event_type",
-                "value",
-                F.col("ts"),
-            )
-            .withWatermark("ts", "10 minutes")
-            .groupBy(*TTL_KEY)
-            .applyInPandasWithState(
-                _dedup_ttl_fn,
-                outputStructType=DEDUP_TTL_OUTPUT_SCHEMA,
-                stateStructType=DEDUP_TTL_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
+        stream = spark.readStream.schema(schema).parquet(os.path.join(src, "*.parquet"))
         q = (
-            stream.writeStream.format("parquet")
+            dedup_ttl_stream(stream)
+            .writeStream.format("parquet")
             .option("path", out)
             .outputMode("append")
             .option("checkpointLocation", ckpt)
@@ -251,14 +237,27 @@ def test_custom_ttl_state_survives_restart(spark):
         q.awaitTermination()
         return sorted(r.event_id for r in spark.read.parquet(out).collect())
 
-    # Run 1: keeper at t0, repeat at +5 min (suppressed, TTL 30 min).
-    write("b0.parquet", [(1, m(0), 7, "a", 1.0), (2, m(5), 7, "a", 1.0)])
-    assert run() == [1]
+    # Run 1: A keeps t0, its +5 min repeat is suppressed (TTL 30 min);
+    # B's first event at +18 min forwards despite A's live TTL.
+    write(
+        "b0.parquet",
+        [(1, m(0), 7, "a", 1.0), (2, m(5), 7, "a", 1.0), (3, m(18), b, "a", 1.0)],
+    )
+    assert run() == [1, 3]
 
-    # Run 2 (restart): +20 min repeat is inside the RESTORED TTL state
-    # and must stay suppressed; +45 min is past the TTL and forwards.
-    write("b1.parquet", [(3, m(20), 7, "a", 1.0), (4, m(45), 7, "a", 1.0)])
-    assert run() == [1, 4], "state not restored: the +20min repeat leaked"
+    # Run 2 (restart): A's +20 and B's +40 repeats are inside their own
+    # RESTORED TTLs and stay suppressed; A's +45 (27 min after B's
+    # keeper) and B's +50 (5 min after A's new keeper) each forward.
+    write(
+        "b1.parquet",
+        [
+            (4, m(20), 7, "a", 1.0),
+            (5, m(40), b, "a", 1.0),
+            (6, m(45), 7, "a", 1.0),
+            (7, m(50), b, "a", 1.0),
+        ],
+    )
+    assert run() == [1, 3, 6, 7], "state not restored per key across the restart"
 
 
 def test_anomaly_welford_state_survives_restart(spark):

@@ -3,6 +3,8 @@ the D4/D5 state behaviors, on the sf0.001 fixture."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import minefields_kafka_streams_deduplication_spark as engine
@@ -58,33 +60,55 @@ def test_windowed_stream_aggregation(spark, sf_dir):
     assert all(r.n_events > 0 for r in rows)
 
 
-def test_tws_path_selection_is_proven(spark, sf_dir):
-    """VERDICT r1 #6: the transformWithStateInPandas fallback must never
-    engage silently. Either the real Spark 4.x path runs, or the test
-    proves the environment gap (google.protobuf absent) is the reason
-    for the applyInPandasWithState fallback — and the two paths must
-    agree on the survivor set either way."""
-    from minefields_kafka_streams_deduplication_spark.streaming import dedup_stream
+def test_custom_ttl_key_straddling_arrow_chunks(spark, tmp_path):
+    """A TTL key whose micro-batch rows span several Arrow chunks
+    (arrow.maxRecordsPerBatch) must still be walked in event-time
+    order: one key of 120 events, written in REVERSE event-time order,
+    split into 50-row chunks, must keep exactly the batch twin's
+    survivors. Sorting each chunk on its own (the old per-key kernel)
+    forwards the latest chunk first and drops everything earlier."""
+    import datetime as dt
 
-    ok, reason = dedup_stream.tws_available()
-    if not ok:
-        # The gap must be the documented one, actually present in the env.
-        assert reason == "google.protobuf not importable", reason
-        with pytest.raises(ImportError):
-            import google.protobuf  # noqa: F401
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    tws_ids = sorted(
-        r.event_id for r in engine.get_queries()["dedup_stream_tws"](spark, sf_dir).collect()
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    n = 120
+    rows = [(i, t0 + dt.timedelta(minutes=7 * i), 1, "click", float(i)) for i in range(n)]
+    rows += [(n + i, t0 + dt.timedelta(minutes=13 * i), 2, "view", 0.0) for i in range(10)]
+    # A null user_id is one key of its own, as in the batch twin's groupBy.
+    rows += [(n + 10 + i, t0 + dt.timedelta(minutes=10 * i), None, "view", 0.0) for i in range(5)]
+    rows.reverse()
+    cols = list(zip(*rows))
+    table = pa.table(
+        {
+            "event_id": pa.array(cols[0], pa.int64()),
+            "ts": pa.array(cols[1], pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array(cols[2], pa.int64()),
+            "event_type": pa.array(cols[3], pa.string()),
+            "value": pa.array(cols[4], pa.float64()),
+        }
     )
-    expected_path = (
-        "transformWithStateInPandas" if ok else "applyInPandasWithState_fallback"
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    pq.write_table(table, os.path.join(sf, "events.parquet"))
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "50")
+    try:
+        stream_ids = sorted(
+            r.event_id
+            for r in engine.get_queries()["dedup_stream_custom_ttl"](spark, sf).collect()
+        )
+    finally:
+        spark.conf.set(key, prev)
+    batch_ids = sorted(
+        r.event_id for r in engine.get_queries()["dedup_batch_custom_ttl"](spark, sf).collect()
     )
-    assert dedup_stream.TWS_LAST_PATH == expected_path
-    ttl_ids = sorted(
-        r.event_id
-        for r in engine.get_queries()["dedup_stream_custom_ttl"](spark, sf_dir).collect()
-    )
-    assert tws_ids == ttl_ids
+    # every 5th click (35 min), every 3rd view (39 min), null-user views at 0 and 40 min
+    assert len(batch_ids) == 24 + 4 + 2
+    assert stream_ids == batch_ids
 
 
 def test_full_outer_stream_join_emits_both_side_nulls(spark, sf_dir):

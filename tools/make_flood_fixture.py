@@ -32,7 +32,7 @@ def main() -> None:
     con.execute(
         f"""
 COPY (
-  SELECT doc_id + r * 10000 AS doc_id,
+  SELECT doc_id + r * (SELECT max(doc_id) + 1 FROM t) AS doc_id,
          text || ' xqzreplica' || r AS text,
          lang, source, n_chars + 12 AS n_chars
   FROM t, range({reps}) s(r)
