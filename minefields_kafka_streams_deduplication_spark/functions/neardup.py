@@ -255,9 +255,8 @@ def _banded_sigs(hashed: DataFrame, n_bands: int, rows_per_band: int) -> DataFra
     the batch star reference the parity pin compares against — both
     must share one signature family, and a groupBy aggregate upstream
     of applyInPandasWithState is an unsupported second stateful
-    operator); batch pipelines use the per-row array kernels
-    (:func:`_banded_from_hs`), pinned value-identical to the
-    :func:`_banded_sigs_agg` reference aggregate."""
+    operator); batch pipelines use the :func:`_banded_sigs_agg`
+    aggregate (through :func:`_banded_from_hs`)."""
     import hashlib
 
     import numpy as np
@@ -302,10 +301,9 @@ def _banded_sigs_agg(
     hashed: DataFrame, n_bands: int, rows_per_band: int
 ) -> DataFrame:
     """(doc_id, band, bhash) banded MinHash signatures as ONE JVM hash
-    aggregate — the r11 batch-pipeline form, kept as the REFERENCE
-    kernel the per-row array form (`_banded_from_hs`, r12 — now what
-    every batch pipeline runs) is test-pinned against. The j-th
-    permutation of
+    aggregate over a (doc_id, h) shingle-hash stream — the batch
+    signature kernel every batch pipeline runs (through
+    `_banded_from_hs`). The j-th permutation of
     a shingle hash is ``xxhash64(h, j)`` (the k-independent-hash
     MinHash formulation; the numpy kernel's 2-universal linear perms
     produce different signature VALUES but identical collision
@@ -363,7 +361,8 @@ def _shingle_hash_array(
     of the exploded form immediately re-aggregated per doc (min buffers
     for signatures, collect_set for verify) — explode + groupBy is two
     stages and an exchange to compute what is a per-ROW map. The array
-    form keeps the whole signature/verify preparation narrow; only
+    form keeps the verify-set preparation narrow and lets one cached
+    frame feed signatures, verify and the final projection; only
     consumers that genuinely need cross-doc shingle rows (the inverted
     Jaccard index) keep `_shingles`. Docs with <3 tokens (or NULL text)
     get an EMPTY array — same rows the exploded form dropped. ``keep``
@@ -411,31 +410,25 @@ def _shingle_string_array(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def _banded_from_hs(
     with_hs: DataFrame, n_bands: int, rows_per_band: int
 ) -> DataFrame:
-    """(doc_id, band, bhash) banded MinHash signatures computed per ROW
-    from a (doc_id, hs) shingle-hash-array frame — value-identical to
-    `_banded_sigs_agg` over the exploded hashes (same ``xxhash64(h, j)``
-    permutation family, same band fold; pinned by
-    test_dedup.test_hs_array_form_matches_exploded_kernels) but with ZERO
-    exchanges: each permutation min is an `array_min(transform(...))`
-    instead of a shuffled min buffer, so the signature stage adds no
-    shuffle at any scale (the agg form's exchange was already only
-    docs × perms longs; this removes even that, plus the explode and
-    the AQE stage boundaries it paid locally — measured 23 → 13 jobs
-    and ~2× wall on the sf0.1 minhash headline). Rows with empty ``hs``
-    must be filtered by the caller (array_min([]) is NULL, which the
-    exploded form never produced)."""
-    perms = n_bands * rows_per_band
-    mins = ", ".join(
-        f"array_min(transform(hs, h -> xxhash64(h, {j})))" for j in range(perms)
-    )
-    band_hash = ", ".join(
-        "xxhash64(" + ", ".join(f"m[{b * rows_per_band + r}]" for r in range(rows_per_band)) + ")"
-        for b in range(n_bands)
-    )
-    return (
-        with_hs.select("doc_id", F.expr(f"array({mins})").alias("m"))
-        .select("doc_id", F.posexplode(F.expr(f"array({band_hash})")).alias("band", "bhash"))
-        .select("doc_id", F.col("band").cast("int").alias("band"), "bhash")
+    """(doc_id, band, bhash) banded MinHash signatures from a
+    (doc_id, hs) shingle-hash-array frame: explode ``hs`` and fold it
+    through `_banded_sigs_agg`, the one batch signature kernel.
+
+    Why explode + aggregate rather than a per-row array expression: the
+    per-row form computed each permutation min as
+    ``array_min(transform(hs, h -> xxhash64(h, j)))``, and
+    ``ArrayTransform`` is ``CodegenFallback`` in Spark 4.1 — every
+    shingle hash of every doc was walked ``perms`` times by the
+    expression interpreter, about half of dedup_text_minhash's job. The
+    aggregate's ``min(xxhash64(h, j))`` buffers run in generated code.
+    The cost is one exchange carrying at most one ``perms``-long min
+    row per doc per map task (partial aggregation combines a doc's
+    shingles map-side first); its volume is docs × perms longs,
+    independent of text length, and it is cheaper than the
+    interpreted loop it replaces. Rows whose ``hs`` is empty or NULL
+    yield no band rows (explode drops them)."""
+    return _banded_sigs_agg(
+        with_hs.select("doc_id", F.explode("hs").alias("h")), n_bands, rows_per_band
     )
 
 
@@ -545,27 +538,26 @@ def _winner_collapse(docs: DataFrame, payload: tuple[str, ...], norm=None):
 @query("dedup_text_minhash")  # rows-only: xxhash64 values are engine-specific
 def dedup_text_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup dedup: MINHASH_PERMS minhashes per doc
-    (j-th permutation = xxhash64(shingle-hash, j), computed per doc row
-    from the shingle-hash array — `_banded_from_hs`, r12), banded into
+    (j-th permutation = xxhash64(shingle-hash, j), folded by
+    `_banded_from_hs` from the shingle-hash array), banded into
     MINHASH_BANDS×4; docs sharing any band bucket are candidates;
     candidates are verified with true Jaccard and the higher doc_id of
     each verified pair is dropped (keep-first). Returns surviving
     documents.
 
-    Scale shape (r12 rework, guide §2.4 — remove shuffles outright):
-    ONE corpus exchange total. The exact-copy collapse and the winner
-    row now fold into a single groupBy(md5) aggregate (min doc_id +
-    min_by payload columns — partial-aggregated map-side, so the
-    exchange carries ≤ one winner row per distinct text per map task;
-    the old winner-id groupBy + left_semi re-scan paid a hash exchange
-    AND a second pass over the corpus). Signatures and verify sets are
-    then per-ROW array expressions over `hs` — no explode, no groupBy,
-    no Python workers, no exchange at all — leaving only the candidate
-    equi-join on the 16-byte (band, bhash) key (shuffle volume
-    O(docs × bands), independent of text size) and the candidate-
-    bounded verify joins. Locally: 23 → 13 AQE jobs, ~2× wall at sf0.1
-    (same output rows bit-for-bit at both SFs, A/B-verified before the
-    swap).
+    Scale shape: ONE corpus exchange total. The exact-copy collapse and
+    the winner row fold into a single groupBy(md5) aggregate (min
+    doc_id + min_by payload columns — partial-aggregated map-side, so
+    the exchange carries ≤ one winner row per distinct text per map
+    task). Verify sets are a per-ROW `array_distinct(hs)`, no
+    exchange. Signatures explode `hs` into a code-generated min
+    aggregate whose one small exchange carries ≤ one 64-long min row
+    per doc per map task — cheaper than the per-row
+    `array_min(transform(...))` form, which Spark runs in the
+    expression interpreter (`ArrayTransform` is `CodegenFallback`).
+    Then the candidate equi-join on the 16-byte (band, bhash) key
+    (shuffle volume O(docs × bands), independent of text size) and the
+    candidate-bounded verify joins.
     """
     all_docs = load_table(spark, sf_dir, "documents")
     # Stage 0 — exact-duplicate collapse (md5 winner row). Web-scale
@@ -594,9 +586,7 @@ def dedup_text_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale the cache spills to executor disk, still cheaper than a
     # second corpus scan.
     base = _shingle_hash_array(winners, keep=("lang", "source")).cache()
-    banded = _banded_from_hs(
-        base.where(F.size("hs") > 0), MINHASH_BANDS, MINHASH_PERMS // MINHASH_BANDS
-    ).cache()
+    banded = _banded_from_hs(base, MINHASH_BANDS, MINHASH_PERMS // MINHASH_BANDS).cache()
     # cand is consumed exactly ONCE (the verify join) — no cache: the
     # r12 `.cache()` here was a leftover multi-consumer artifact, and
     # an InMemoryRelation on a once-read frame is a pure pipeline
@@ -668,8 +658,8 @@ def neardup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact-copy collapse via THE shared single-aggregate winner form
     # (`_winner_collapse` — r13, VERDICT r12 #5): the witness now runs
     # the SAME collapse code path as the rows-only dedup_text_minhash,
-    # so this query's oracle row pins the full r12 kernel family
-    # (single-aggregate collapse + array signatures + sets= verify).
+    # so this query's oracle row pins the full kernel family
+    # (single-aggregate collapse + signature kernel + sets= verify).
     # The aggregate partial-aggregates map-side (≤ one winner-candidate
     # text per distinct text per map task crosses the exchange), where
     # the previous window form shipped EVERY copy's text; the member→rep
@@ -684,20 +674,16 @@ def neardup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
 
-    # Per-rep shingle STRING array (r12, the dedup_text_minhash array
-    # rework applied to the witness): signatures fold per ROW from
-    # `transform(sh, xxhash64)` (`_banded_from_hs` — value-identical to
-    # the old explode + `_banded_sigs_agg`, pinned) and the verify sets
-    # are `array_distinct(sh)` — the signature exchange, the explode
-    # and the collect_set exchange are all gone; strings are KEPT so
-    # verify still intersects exact shingle text (what the DuckDB
-    # oracle checks). Cached: candidate generation and verify both
-    # read it.
+    # Per-rep shingle STRING array: signatures hash it with
+    # `transform(sh, xxhash64)` and fold through `_banded_from_hs` (one
+    # small exchange: ≤ one 64-long min row per rep per map task); the
+    # verify sets are `array_distinct(sh)`, so verify's explode and
+    # collect_set exchange are gone. Strings are KEPT so verify still
+    # intersects exact shingle text (what the DuckDB oracle checks).
+    # Cached: candidate generation and verify both read it.
     sarr = _shingle_string_array(reps).cache()
     banded = _banded_from_hs(
-        sarr.where(F.size("sh") > 0).select(
-            "doc_id", F.expr("transform(sh, s -> xxhash64(s))").alias("hs")
-        ),
+        sarr.select("doc_id", F.expr("transform(sh, s -> xxhash64(s))").alias("hs")),
         MINHASH_WITNESS_BANDS,
         MINHASH_PERMS // MINHASH_WITNESS_BANDS,
     ).cache()
@@ -1840,14 +1826,12 @@ def neardup_incremental_df(docs: DataFrame, cut: int) -> DataFrame:
     to the incremental probe): exact-copy collapse is ONE window over
     (side, md5(text)) — the side flag partitions exactly like the old
     per-side windows, so rep groups and rep_ids are identical, but the
-    corpus shuffles once, not twice. Signatures fold per rep ROW from
-    the shingle STRING array (`_banded_from_hs` over
-    `transform(sh, xxhash64)` — value-identical to the old per-side
-    explode + `_banded_sigs_agg`, kernel-equality pinned), and verify
-    consumes `array_distinct(sh)` from the SAME cached frame — the two
-    signature-aggregate exchanges, both shingle explodes, and verify's
-    corpus re-scan + collect_set exchange are all gone. Strings are
-    kept through verify (the DuckDB oracle intersects shingle TEXT).
+    corpus shuffles once, not twice. Signatures for BOTH sides come
+    from one `_banded_from_hs` over `transform(sh, xxhash64)` of the
+    shingle STRING array — one small signature exchange (≤ one 64-long
+    min row per rep per map task) — and verify consumes `array_distinct(sh)` from the SAME cached frame,
+    so verify's corpus re-scan + collect_set exchange are gone. Strings
+    are kept through verify (the DuckDB oracle intersects shingle TEXT).
     A rep's side is recoverable from doc_id alone (side == doc_id ≥
     cut), so the banded frame is computed once and split by predicate —
     no side flag has to ride through the signature kernels.
@@ -1878,9 +1862,7 @@ def neardup_incremental_df(docs: DataFrame, cut: int) -> DataFrame:
     # same-session invocations otherwise accumulate cached frames.
     sarr = _shingle_string_array(reps).cache()
     banded = _banded_from_hs(
-        sarr.where(F.size("sh") > 0).select(
-            "doc_id", F.expr("transform(sh, s -> xxhash64(s))").alias("hs")
-        ),
+        sarr.select("doc_id", F.expr("transform(sh, s -> xxhash64(s))").alias("hs")),
         MINHASH_WITNESS_BANDS,
         MINHASH_PERMS // MINHASH_WITNESS_BANDS,
     ).cache()

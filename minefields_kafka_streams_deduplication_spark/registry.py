@@ -402,7 +402,7 @@ _R13_REVERIFY: tuple[str, ...] = (
     # witness (neardup_minhash_verified) is re-forced in alongside it —
     # r13 extends the witness to pin the single-aggregate collapse form
     # the rows-only twin uses, so the witness row now covers the full
-    # kernel family (collapse + array signatures + sets= verify).
+    # kernel family (collapse + signature kernel + sets= verify).
     "dedup_text_minhash",
     "neardup_minhash_verified",
 )

@@ -614,18 +614,47 @@ def test_banded_sigs_agg_determinism_and_banding(spark):
     assert one_part == sigs
 
 
+def _per_row_banded_reference(with_hs, n_bands, rows_per_band):
+    """The per-row array signature form dedup_text_minhash ran before
+    the aggregate kernel: each permutation min is
+    ``array_min(transform(hs, h -> xxhash64(h, j)))`` and each band
+    hash is ``xxhash64`` over its rows' mins. Kept here as the
+    independent value reference for `_banded_from_hs`."""
+    from pyspark.sql import functions as F
+
+    perms = n_bands * rows_per_band
+    mins = ", ".join(
+        f"array_min(transform(hs, h -> xxhash64(h, {j})))" for j in range(perms)
+    )
+    band_hash = ", ".join(
+        "xxhash64("
+        + ", ".join(f"m[{b * rows_per_band + r}]" for r in range(rows_per_band))
+        + ")"
+        for b in range(n_bands)
+    )
+    return (
+        with_hs.where(F.size("hs") > 0)
+        .select("doc_id", F.expr(f"array({mins})").alias("m"))
+        .select(
+            "doc_id",
+            F.posexplode(F.expr(f"array({band_hash})")).alias("band", "bhash"),
+        )
+    )
+
+
 def test_hs_array_form_matches_exploded_kernels(spark):
-    """The r12 array-form signature kernels must be VALUE-identical to
-    the exploded forms they replace — this is what lets
-    dedup_text_minhash swap `_shingles`+`_banded_sigs_agg` for
-    `_shingle_hash_array`+`_banded_from_hs` with bit-identical output:
+    """The shingle-array kernels are VALUE-identical to the exploded
+    forms, and `_banded_from_hs` reproduces the per-row
+    ``array_min(transform(...))`` signatures it replaced:
 
     - `_shingle_hash_array(docs).hs` as a multiset == the exploded
       `xxhash64(shingle)` rows per doc (same grammar, same hash);
-    - `_banded_from_hs` == `_banded_sigs_agg` (band, bhash) sets per doc
-      (same xxhash64(h, j) permutation family, same band fold);
-    - docs with <3 tokens yield an EMPTY hs array and NO banded rows
-      (the exploded form dropped them before the aggregate)."""
+    - `_shingle_string_array` hashed with `transform(sh, xxhash64)`
+      gives the same multiset (the witness's signature input);
+    - `_banded_from_hs` == the inlined per-row reference (band, bhash)
+      sets per doc, at the production 16×4 AND the witness 32×2
+      banding (same xxhash64(h, j) permutation family, same band fold);
+    - docs with <3 tokens yield an EMPTY hs array and NO banded rows."""
     from collections import Counter
 
     from pyspark.sql import functions as F
@@ -633,8 +662,8 @@ def test_hs_array_form_matches_exploded_kernels(spark):
     from minefields_kafka_streams_deduplication_spark.functions.neardup import (
         MINHASH_BANDS,
         MINHASH_PERMS,
+        MINHASH_WITNESS_BANDS,
         _banded_from_hs,
-        _banded_sigs_agg,
         _shingle_hash_array,
         _shingle_string_array,
         _shingles,
@@ -674,36 +703,50 @@ def test_hs_array_form_matches_exploded_kernels(spark):
         Counter((r.doc_id, s) for r in with_sh.collect() for s in r.sh)
         == exploded_str
     )
-    from pyspark.sql import functions as F2
-
     rehashed = Counter(
         (r.doc_id, h)
         for r in with_sh.select(
-            "doc_id", F2.expr("transform(sh, s -> xxhash64(s))").alias("hs")
+            "doc_id", F.expr("transform(sh, s -> xxhash64(s))").alias("hs")
         ).collect()
         for h in r.hs
     )
     assert rehashed == exploded
 
-    rpb = MINHASH_PERMS // MINHASH_BANDS
-    agg_form = {
-        (r.doc_id, r.band, r.bhash)
-        for r in _banded_sigs_agg(
-            _shingles(docs, distinct=False).select(
-                "doc_id", F.xxhash64("shingle").alias("h")
-            ),
-            MINHASH_BANDS,
-            rpb,
-        ).collect()
-    }
-    arr_form = {
-        (r.doc_id, r.band, r.bhash)
-        for r in _banded_from_hs(
-            with_hs.where(F.size("hs") > 0), MINHASH_BANDS, rpb
-        ).collect()
-    }
-    assert arr_form == agg_form
-    assert not any(d == 3 for d, _, _ in arr_form)
+    for n_bands in (MINHASH_BANDS, MINHASH_WITNESS_BANDS):
+        rpb = MINHASH_PERMS // n_bands
+        reference = {
+            (r.doc_id, r.band, r.bhash)
+            for r in _per_row_banded_reference(with_hs, n_bands, rpb).collect()
+        }
+        got = {
+            (r.doc_id, r.band, r.bhash)
+            for r in _banded_from_hs(with_hs, n_bands, rpb).collect()
+        }
+        assert got == reference
+        assert len(got) == 3 * n_bands  # docs 1, 2, 4; one bhash per band
+        assert not any(d == 3 for d, _, _ in got)
+
+
+def test_banded_from_hs_drops_empty_and_null_hs(spark):
+    """Rows whose ``hs`` is empty or NULL yield no band rows, with no
+    ``size(hs) > 0`` filter upstream, and do not disturb the band rows
+    of the other docs."""
+    from minefields_kafka_streams_deduplication_spark.functions.neardup import (
+        MINHASH_BANDS,
+        MINHASH_PERMS,
+        _banded_from_hs,
+    )
+
+    with_hs = spark.createDataFrame(
+        [(1, [11, 12, 13]), (2, []), (3, None)],
+        "doc_id LONG, hs ARRAY<BIGINT>",
+    )
+    rows = _banded_from_hs(
+        with_hs, MINHASH_BANDS, MINHASH_PERMS // MINHASH_BANDS
+    ).collect()
+    assert {r.doc_id for r in rows} == {1}
+    assert sorted(r.band for r in rows) == list(range(MINHASH_BANDS))
+    assert all(r.bhash is not None for r in rows)
 
 
 def test_shingles_distinct_is_per_doc_set(spark):
