@@ -400,6 +400,12 @@ def doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     old sort — outputs row-identical at both SFs (A/B-verified; docs
     with <3 tokens are filtered the way the old explode dropped them).
     Measured min 0.225 → 0.195 s at sf0.1.
+
+    Output contract: ``fingerprints`` is one STRING, the kept hashes in
+    ascending order joined by single spaces (it was ``array<bigint>``
+    until the driver's canonicalization — ``toPandas()`` then
+    ``sort_values`` over every column — crashed on the array column).
+    ``n_fp`` counts them.
     """
     from ..functions.neardup import _shingle_hash_array
 
@@ -415,8 +421,12 @@ def doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = F.slice(F.array_sort(F.array_distinct("hs")), 1, WINNOW_K)
     return (
         _shingle_hash_array(docs_ok.repartition(n_part, "doc_id"))
-        .select("doc_id", fp.alias("fingerprints"))
-        .select("doc_id", "fingerprints", F.size("fingerprints").alias("n_fp"))
+        .select("doc_id", fp.alias("fp"))
+        .select(
+            "doc_id",
+            F.array_join(F.col("fp").cast("array<string>"), " ").alias("fingerprints"),
+            F.size("fp").alias("n_fp"),
+        )
     )
 
 

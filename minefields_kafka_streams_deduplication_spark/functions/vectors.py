@@ -725,6 +725,12 @@ def embedding_pca_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds the centered original (projections are contractions), and
     the projection is deterministic across runs.
 
+    Output contract: ``reduced`` is one STRING, the PCA_K coordinates
+    as Spark's double-to-string casts joined by single spaces (it was
+    ``array<double>`` until the driver's canonicalization —
+    ``toPandas()`` then ``sort_values`` over every column — crashed on
+    the array column). Each token parses back to the exact double.
+
     Scale note: MLlib PCA computes the dim x dim Gramian in one
     distributed pass (fine while dim stays in the thousands); the model
     fit is the only non-map stage.
@@ -745,7 +751,7 @@ def embedding_pca_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq = lambda c: F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x)
     return reduced.select(
         "vec_id",
-        F.col("reduced"),
+        F.array_join(F.col("reduced").cast("array<string>"), " ").alias("reduced"),
         F.sqrt(sq(F.col("orig"))).alias("orig_norm"),
         F.sqrt(sq(F.col("reduced"))).alias("reduced_norm"),
     )

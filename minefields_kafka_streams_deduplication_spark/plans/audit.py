@@ -4,7 +4,7 @@
 physical plan: pushed filters, read schema width, exchange (shuffle)
 count, broadcast usage, whole-stage-codegen coverage. Used by
 tests/test_plans.py to pin the plan shape of key operators and by
-tools/audit_plans.py for the per-round report.
+tools/audit_plans.py for the plan report.
 """
 
 from __future__ import annotations
@@ -32,12 +32,10 @@ class PlanAudit:
     raw: str = ""
 
 
-def audit_plan(df: DataFrame, execute: bool = False) -> PlanAudit:
-    """``execute=True`` runs the plan first so AQE finalizes it —
-    WholeStageCodegen spans and runtime join strategy only appear in the
-    final adaptive plan (isFinalPlan=true)."""
-    if execute:
-        df.write.format("noop").mode("overwrite").save()
+def audit_plan(df: DataFrame) -> PlanAudit:
+    """Audit the plan as planned, without running it. Under AQE this is
+    the initial plan (isFinalPlan=false), so runtime join strategy and
+    final codegen spans are not in it."""
     s = plan_string(df, "formatted")
     audit = PlanAudit(raw=s)
     audit.pushed_filters = [

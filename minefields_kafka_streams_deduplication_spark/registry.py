@@ -9,7 +9,9 @@ and the driver records the weaker check for it.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -34,428 +36,64 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 # The external driver records correctness rows for only the FIRST 50
-# queries() entries (observed every round since r1). Spend that window
-# entirely on oracle-checkable queries. Standing rotation (see README):
-#   tier 0 — oracle queries with NO driver row yet (new this round);
-#   tier 1 — queries whose last driver check failed or was hardened
-#            since (must re-verify; empty when a round closes green);
-#   tier 2 — remaining oracle queries, stalest driver rows first
-#            (rotating re-verification across rounds);
+# queries() entries (observed every round since r1) and writes them to
+# CORRECTNESS_r{N}.json next to this package. The window rotation is
+# derived from those files; REVERIFY is its only hand-kept input.
+# Standing rotation (see README):
+#   tier 0 — oracle queries with no green driver row yet;
+#   tier 1 — REVERIFY, in tuple order (kernel changed since its last
+#            green row, which no file can show);
+#   tier 2 — remaining oracle queries, stalest green driver row first;
 #   tier 3 — rows-only queries (the driver's weaker rows-check; the
 #            test suite pins their semantics directly).
-# Every oracle query has landed at least one green driver row (r1-r4:
-# 138/138); the builder's own strict gate additionally checks ALL
-# oracles at sf0.01 AND sf0.1 every round (tools/check_strict.py).
-_R1_DRIVER_VERIFIED = frozenset(
-    {
-        "scan_events", "latest_by_key", "filter_purchases", "project_events",
-        "explode_tokens", "branch_by_type", "merge_streams", "dedup_exact",
-        "dedup_keep_first", "dedup_windowed", "dedup_incremental_new_events",
-        "dedup_text_exact", "join_orders_customer", "join_left_customer_orders",
-        "join_semi_customers_with_orders", "join_anti_customers_no_orders",
-        "join_interval_view_purchase", "join_broadcast_nation",
-        "join_fk_orders_nation", "join_salted_orders_customer",
-        "join_asof_latest_order_before_event", "histogram_event_values",
-        "agg_count_by_type", "agg_revenue_by_user", "q1_pricing_summary",
-        "agg_distinct_users_by_type", "agg_rollup_nation_region",
-        "q9_product_profit", "q12_late_shipment_buckets", "q15_top_supplier",
-        "q2_min_price_supplier", "scalar_subquery_delta",
-        "window_daily_distinct_users", "q7_nation_trade_volume",
-        "q19_disjunctive_predicates", "agg_grouping_sets",
-        "q10_returned_item_customers", "q18_large_volume_orders",
-        "q4_late_shipment_priority", "q14_promo_effect", "q6_forecast_revenue",
-        "q3_shipping_priority", "q5_local_supplier_volume",
-        "agg_cube_status_priority", "pivot_user_event_matrix",
-        "agg_value_distribution", "cogroup_user_activity", "agg_salted_by_type",
-        "agg_collect_event_types",
-    }
-)
+# tools/check_strict.py additionally checks every oracle for exact
+# equality at sf0.01 and sf0.1.
 
-# Oracle queries that landed a green row in CORRECTNESS_r02.json.
-_R2_DRIVER_VERIFIED = frozenset(
-    {
-        "window_tumbling_daily", "window_hopping",
-        "rank_users_by_spend", "rank_distribution_functions",
-        "first_last_event_per_user", "lead_next_event_gap",
-        "lag_time_between_events", "running_total_by_user",
-        "topk_products_by_revenue", "set_intersect_buyers_viewers",
-        "set_except_all_view_surplus", "set_except_inactive_users",
-        "text_stats", "token_frequency", "lang_id_stopwords",
-        "doc_quality_score", "token_counts", "doc_fingerprint",
-        "sample_mix_by_lang", "tfidf_top_terms", "json_extract_props",
-        "json_parse_struct", "events_by_weekday", "array_vector_norm",
-        "similarity_topk", "similarity_topk_blocked", "dedup_embedding_cosine",
-        "dedup_text_ngram_jaccard", "multimodal_meta", "peek_event_counts",
-        "explode_tokens_with_position", "q8_market_share",
-        "q11_important_stock", "q13_customer_distribution",
-        "q16_supplier_part_cnt", "q17_small_quantity_revenue",
-        "q20_promo_part_shippers", "q21_suppliers_kept_waiting",
-        "q22_dormant_rich_customers", "unpivot_lineitem_measures",
-        "agg_grouping_id_rollup", "window_sliding_event_anchored",
-        "rolling_distinct_users_7d", "third_event_per_user",
-        "agg_mode_median_by_type", "pii_scrub", "gopher_quality_rules",
-        "bm25_doc_search", "doc_repetition_metrics",
-    }
-)
 
-# Oracle queries that landed a green row in CORRECTNESS_r03.json (49 of
-# 50; the one red — train_val_split — sits in the round-4 reverify tier).
-_R3_DRIVER_VERIFIED = frozenset(
-    {
-        "latest_by_key_tombstoned", "dedup_incremental_bloom",
-        "histogram_equidepth_value", "window_session_native",
-        "window_incremental_backfill", "funnel_view_click_purchase",
-        "cohort_weekly_retention", "anomaly_value_zscore", "ohlc_bars_hourly",
-        "time_weighted_avg_daily", "gap_fill_locf_hourly",
-        "join_asof_forward_order", "doc_char_entropy",
-        "embedding_quantize_int8", "contamination_ngram_check",
-        "dedup_text_editdistance", "profile_lineitem", "shuffle_deterministic",
-        "topk_terms_per_lang", "importance_weight_dsir", "doc_unigram_logprob",
-        "sample_topk_per_group", "corpus_vocab_stats", "diagnose_key_skew",
-        "sink_parquet_roundtrip", "sink_exactly_once_parquet",
-        "sink_upsert_keyed_table", "window_session_sql",
-        "window_tumbling_daily", "window_hopping",
-        "window_sliding_event_anchored", "running_total_by_user",
-        "agg_revenue_by_user", "agg_salted_by_type", "cogroup_user_activity",
-        "scalar_subquery_delta", "scan_events", "latest_by_key",
-        "filter_purchases", "project_events", "explode_tokens",
-        "branch_by_type", "merge_streams", "dedup_exact", "dedup_keep_first",
-        "dedup_windowed", "dedup_incremental_new_events", "dedup_text_exact",
-        "join_orders_customer",
-    }
-)
+def _last_green(root: Path) -> dict[str, int]:
+    """Query name -> last round whose driver row has ``hash_match`` True.
+    A query with no such row (missing or red) is absent."""
+    last: dict[str, int] = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        rnd = path.stem.removeprefix("CORRECTNESS_r")
+        if not rnd.isdigit():
+            continue
+        for name, row in json.loads(path.read_text()).items():
+            if row.get("hash_match") is True:
+                last[name] = max(last.get(name, 0), int(rnd))
+    return last
 
-# Oracle queries that landed a green row in CORRECTNESS_r04.json (50/50
-# green — the round-4 window covered every never-checked oracle, the
-# train_val_split re-verify, and the stalest r1-era rows).
-_R4_DRIVER_VERIFIED = frozenset(
-    {
-        "bpe_pair_stats", "neardup_minhash_verified", "neardup_incremental",
-        "source_quality_report", "assign_contiguous_ids",
-        "shard_balanced_tokens", "punctuate_wall_clock_counts",
-        "store_point_lookup", "store_window_fetch", "store_range_scan",
-        "store_session_fetch", "train_val_split", "join_left_customer_orders",
-        "join_semi_customers_with_orders", "join_anti_customers_no_orders",
-        "join_interval_view_purchase", "join_broadcast_nation",
-        "join_fk_orders_nation", "join_salted_orders_customer",
-        "join_asof_latest_order_before_event", "histogram_event_values",
-        "agg_count_by_type", "q1_pricing_summary",
-        "agg_distinct_users_by_type", "agg_rollup_nation_region",
-        "q9_product_profit", "q12_late_shipment_buckets", "q15_top_supplier",
-        "q2_min_price_supplier", "window_daily_distinct_users",
-        "q7_nation_trade_volume", "q19_disjunctive_predicates",
-        "agg_grouping_sets", "q10_returned_item_customers",
-        "q18_large_volume_orders", "q4_late_shipment_priority",
-        "q14_promo_effect", "q6_forecast_revenue", "q3_shipping_priority",
-        "q5_local_supplier_volume", "agg_cube_status_priority",
-        "pivot_user_event_matrix", "agg_value_distribution",
-        "agg_collect_event_types", "peek_event_counts",
-        "explode_tokens_with_position", "q8_market_share",
-        "q11_important_stock", "q13_customer_distribution",
-        "q16_supplier_part_cnt",
-    }
-)
 
-# Oracle queries that landed a green row in CORRECTNESS_r05.json (50/50
-# green — the 14 round-5 oracle additions plus the 36 stalest r2-era rows).
-_R5_DRIVER_VERIFIED = frozenset(
-    {
-        "scd2_user_value_history", "drift_report_embedding_dims", "doc_bigram_logprob",
-        "mix_temperature_weights", "chunk_documents", "drift_report_value_psi",
-        "validate_expectations", "sample_weighted_docs", "drift_report_value_ks",
-        "punctuate_stream_time_counts", "table_suppress_final_state", "store_window_fetch_all",
-        "store_versioned_get", "zorder_box_query", "q17_small_quantity_revenue",
-        "q20_promo_part_shippers", "q21_suppliers_kept_waiting", "q22_dormant_rich_customers",
-        "unpivot_lineitem_measures", "agg_grouping_id_rollup", "rank_users_by_spend",
-        "rank_distribution_functions", "first_last_event_per_user", "lead_next_event_gap",
-        "lag_time_between_events", "topk_products_by_revenue", "set_intersect_buyers_viewers",
-        "set_except_all_view_surplus", "set_except_inactive_users", "rolling_distinct_users_7d",
-        "third_event_per_user", "agg_mode_median_by_type", "text_stats",
-        "token_frequency", "lang_id_stopwords", "doc_quality_score",
-        "token_counts", "doc_fingerprint", "sample_mix_by_lang",
-        "tfidf_top_terms", "pii_scrub", "gopher_quality_rules",
-        "bm25_doc_search", "doc_repetition_metrics", "json_extract_props",
-        "json_parse_struct", "events_by_weekday", "array_vector_norm",
-        "similarity_topk", "similarity_topk_blocked",
-    }
-)
+LAST_GREEN: dict[str, int] = _last_green(Path(__file__).resolve().parent.parent)
 
-# Oracle queries that landed a green row in CORRECTNESS_r06.json (50/50
-# green — the 11 round-6 oracle additions plus the 39 stalest r2/r3-era rows).
-_R6_DRIVER_VERIFIED = frozenset(
-    {
-        "events_winsorized_stats", "dau_mau_stickiness", "cohort_churn_rate",
-        "revenue_pareto_point", "event_transition_matrix", "source_overlap_ngrams",
-        "doc_novelty_ngrams", "train_val_split_stratified", "drift_report_ks_by_type",
-        "corpus_dup_inflation", "store_snapshot_diff", "dedup_embedding_cosine",
-        "dedup_text_ngram_jaccard", "multimodal_meta", "scan_events",
-        "latest_by_key", "latest_by_key_tombstoned", "filter_purchases",
-        "project_events", "explode_tokens", "branch_by_type",
-        "merge_streams", "dedup_exact", "dedup_keep_first",
-        "dedup_windowed", "dedup_incremental_new_events", "dedup_incremental_bloom",
-        "dedup_text_exact", "join_orders_customer", "agg_revenue_by_user",
-        "scalar_subquery_delta", "cogroup_user_activity", "agg_salted_by_type",
-        "histogram_equidepth_value", "window_tumbling_daily", "window_hopping",
-        "window_session_sql", "window_session_native", "window_sliding_event_anchored",
-        "window_incremental_backfill", "running_total_by_user", "funnel_view_click_purchase",
-        "cohort_weekly_retention", "anomaly_value_zscore", "ohlc_bars_hourly",
-        "time_weighted_avg_daily", "gap_fill_locf_hourly", "join_asof_forward_order",
-        "doc_char_entropy", "embedding_quantize_int8",
-    }
-)
-
-# Oracle queries that landed a green row in CORRECTNESS_r07.json (50/50
-# green — the 12 round-7 oracle additions, 6 tier-1 hardened re-verifies,
-# and the stalest r3/r4-era rotation rows).
-_R7_DRIVER_VERIFIED = frozenset(
-    {
-        "agg_count_by_type", "agg_distinct_users_by_type", "agg_rollup_nation_region",
-        "attribution_last_touch", "bounce_rate_daily", "contamination_ngram_check",
-        "corpus_vocab_stats", "decontaminate_report", "dedup_embedding_cosine",
-        "dedup_keep_by_source_priority", "dedup_text_editdistance", "diagnose_key_skew",
-        "doc_bigram_logprob", "doc_unigram_logprob", "dup_rate_by_source",
-        "explode_tokens_with_position", "histogram_event_values", "importance_weight_dsir",
-        "inter_event_gap_stats", "join_anti_customers_no_orders", "join_asof_latest_order_before_event",
-        "join_broadcast_nation", "join_fk_orders_nation", "join_interval_view_purchase",
-        "join_left_customer_orders", "join_salted_orders_customer", "join_semi_customers_with_orders",
-        "order_fulfillment_latency", "peek_event_counts", "profile_lineitem",
-        "q12_late_shipment_buckets", "q15_top_supplier", "q1_pricing_summary",
-        "q2_min_price_supplier", "q7_nation_trade_volume", "q9_product_profit",
-        "rfm_segments", "sample_topk_per_group", "shuffle_deterministic",
-        "sink_exactly_once_parquet", "sink_parquet_roundtrip", "sink_upsert_keyed_table",
-        "store_snapshot_diff", "store_snapshot_stream_eos", "table_suppress_final_state",
-        "tokens_per_doc_percentiles", "topk_terms_per_lang", "vocab_zipf_top100",
-        "weekly_active_growth", "window_daily_distinct_users",
-    }
-)
-
-# Oracle queries that landed a green row in CORRECTNESS_r08.json (50/50
-# green — the 21 round-8 oracle additions, 16 tier-1 execution-changed
-# re-verifies, and 13 of the stalest r4-era rotation rows).
-_R8_DRIVER_VERIFIED = frozenset(
-    {
-        "activity_gini_by_type", "agg_collect_event_types", "agg_cube_status_priority",
-        "agg_grouping_sets", "agg_value_distribution", "basket_part_pairs_top",
-        "bigram_pmi_top", "bm25_doc_search", "cohort_time_to_first_purchase",
-        "concurrent_sessions_hourly", "contamination_ngram_check", "customer_lifespan_buckets",
-        "customer_spend_percentile_by_nation", "decontaminate_report", "dedup_embedding_cosine",
-        "diagnose_key_skew", "doc_bigram_logprob", "doc_length_token_corr",
-        "doc_unigram_logprob", "dup_cluster_size_histogram", "event_transition_matrix",
-        "event_type_user_jaccard", "importance_weight_dsir", "kafka_wire_dlq_routing",
-        "label_centroid_distances", "lang_source_chi2_cells", "median_session_length_by_day",
-        "new_vs_returning_daily", "pivot_user_event_matrix", "power_user_concentration",
-        "q10_returned_item_customers", "q14_promo_effect", "q18_large_volume_orders",
-        "q19_disjunctive_predicates", "q3_shipping_priority", "q4_late_shipment_priority",
-        "q5_local_supplier_volume", "q6_forecast_revenue", "revenue_mom_growth",
-        "rfm_segments", "session_path_topk", "spend_decile_migration",
-        "store_snapshot_diff", "store_snapshot_stream_eos", "streak_longest_daily",
-        "table_suppress_final_state", "tfidf_top_terms", "tokens_mad_by_lang",
-        "tokens_per_doc_percentiles", "weekly_active_growth",
-    }
-)
-
-# Oracle queries that landed a green row in CORRECTNESS_r09.json (50/50
-# green — the 21 round-9 oracle additions, 6 tier-1 sessionize-once
-# re-verifies, and 23 of the stalest rotation rows).
-_R9_DRIVER_VERIFIED = frozenset(
-    {
-        'agg_grouping_id_rollup', 'assign_contiguous_ids',
-        'basket_size_distribution', 'bounce_rate_daily', 'bpe_pair_stats',
-        'char_class_profile_by_lang', 'clv_quartiles_by_nation',
-        'concurrent_sessions_hourly', 'corpus_token_budget_by_source',
-        'dedup_savings_by_source', 'discount_revenue_curve',
-        'events_hourly_seasonality', 'first_day_conversion_by_cohort',
-        'inter_purchase_days_median_by_nation', 'lang_confusion_matrix',
-        'median_session_length_by_day', 'monthly_order_status_mix',
-        'neardup_incremental', 'neardup_minhash_verified', 'order_value_buckets',
-        'part_type_revenue_topk', 'punctuate_wall_clock_counts',
-        'q11_important_stock', 'q13_customer_distribution', 'q16_supplier_part_cnt',
-        'q17_small_quantity_revenue', 'q20_promo_part_shippers',
-        'q21_suppliers_kept_waiting', 'q22_dormant_rich_customers',
-        'q8_market_share', 'rank_distribution_functions', 'rank_users_by_spend',
-        'returned_rate_by_month', 'session_duration_percentiles',
-        'session_path_topk', 'shard_balanced_tokens', 'shipping_delay_histogram',
-        'source_quality_report', 'stopword_density_histogram', 'store_point_lookup',
-        'store_range_scan', 'store_session_fetch', 'store_window_fetch',
-        'token_length_histogram', 'train_val_split', 'unpivot_lineitem_measures',
-        'user_funnel_depth_distribution', 'value_percentiles_by_type',
-        'weekday_hour_peak_load', 'window_session_sql',
-    }
-)
-
-# CORRECTNESS_r10: 50/50 green (the 5 round-10 oracle additions, the 7
-# unified-session-store tier-1 re-verifies, and 38 of the stalest
-# r5-era rotation rows).
-_R10_DRIVER_VERIFIED = frozenset(
-    {
-        "dedup_cross_source_matrix", "order_lines_span_days_histogram",
-        "session_gap_sensitivity", "event_disorder_profile",
-        "token_first_seen_by_source", "window_session_sql",
-        "session_path_topk", "median_session_length_by_day",
-        "concurrent_sessions_hourly", "bounce_rate_daily",
-        "session_duration_percentiles", "store_session_fetch",
-        "first_last_event_per_user", "lead_next_event_gap",
-        "lag_time_between_events", "topk_products_by_revenue",
-        "set_intersect_buyers_viewers", "set_except_all_view_surplus",
-        "set_except_inactive_users", "rolling_distinct_users_7d",
-        "third_event_per_user", "agg_mode_median_by_type",
-        "scd2_user_value_history", "text_stats", "token_frequency",
-        "lang_id_stopwords", "doc_quality_score", "token_counts",
-        "doc_fingerprint", "sample_mix_by_lang", "pii_scrub",
-        "gopher_quality_rules", "doc_repetition_metrics",
-        "json_extract_props", "json_parse_struct", "events_by_weekday",
-        "array_vector_norm", "similarity_topk", "similarity_topk_blocked",
-        "drift_report_embedding_dims", "mix_temperature_weights",
-        "chunk_documents", "drift_report_value_psi",
-        "validate_expectations", "sample_weighted_docs",
-        "drift_report_value_ks", "punctuate_stream_time_counts",
-        "store_window_fetch_all", "store_versioned_get",
-        "zorder_box_query",
-    }
-)
-
-# CORRECTNESS_r11: 50/50 green (the r11-new oracles, the 3 tier-1
-# re-verifies, and the stalest rotation rows).
-_R11_DRIVER_VERIFIED = frozenset(
-    {
-        "dedup_prefix_digest", "supplier_revenue_hhi_by_nation",
-        "mktsegment_revenue_share_by_month", "brand_return_rate",
-        "user_max_gap_histogram", "customer_reorder_interval_buckets",
-        "event_type_burstiness", "session_transition_matrix",
-        "token_cooccurrence_topk", "neardup_jaccard_histogram",
-        "event_disorder_profile", "neardup_minhash_verified",
-        "neardup_incremental", "scan_events", "latest_by_key",
-        "latest_by_key_tombstoned", "filter_purchases", "project_events",
-        "explode_tokens", "branch_by_type", "merge_streams", "dedup_exact",
-        "dedup_keep_first", "dedup_windowed", "dedup_incremental_new_events",
-        "dedup_incremental_bloom", "dedup_text_exact", "join_orders_customer",
-        "agg_revenue_by_user", "scalar_subquery_delta", "cogroup_user_activity",
-        "agg_salted_by_type", "histogram_equidepth_value",
-        "events_winsorized_stats", "window_tumbling_daily", "window_hopping",
-        "window_session_native", "window_sliding_event_anchored",
-        "window_incremental_backfill", "running_total_by_user",
-        "funnel_view_click_purchase", "cohort_weekly_retention",
-        "anomaly_value_zscore", "dau_mau_stickiness", "cohort_churn_rate",
-        "revenue_pareto_point", "ohlc_bars_hourly", "time_weighted_avg_daily",
-        "gap_fill_locf_hourly", "join_asof_forward_order",
-    }
-)
-
-# CORRECTNESS_r12: 49/50 green (the r12 reverify tier plus the stalest
-# rotation rows; dedup_text_minhash is the 50th — rows-only, no oracle,
-# so never green and not listed).
-_R12_DRIVER_VERIFIED = frozenset(
-    {
-        "agg_count_by_type", "agg_distinct_users_by_type",
-        "agg_rollup_nation_region", "attribution_last_touch",
-        "corpus_dup_inflation", "corpus_vocab_stats",
-        "dedup_keep_by_source_priority", "dedup_text_editdistance",
-        "dedup_text_ngram_jaccard",
-        "dedup_text_simhash", "doc_char_entropy", "doc_novelty_ngrams",
-        "drift_report_ks_by_type", "drift_stream_psi", "dup_rate_by_source",
-        "embedding_quantize_int8", "event_type_burstiness",
-        "ewma_user_value", "explode_tokens_with_position",
-        "histogram_event_values", "inter_event_gap_stats",
-        "join_anti_customers_no_orders",
-        "join_asof_latest_order_before_event", "join_broadcast_nation",
-        "join_fk_orders_nation", "join_interval_view_purchase",
-        "join_left_customer_orders", "join_salted_orders_customer",
-        "join_semi_customers_with_orders", "multimodal_meta",
-        "neardup_incremental", "neardup_minhash_verified",
-        "order_fulfillment_latency", "peek_event_counts", "profile_lineitem",
-        "q12_late_shipment_buckets", "q15_top_supplier",
-        "q1_pricing_summary", "q2_min_price_supplier",
-        "q7_nation_trade_volume", "q9_product_profit",
-        "rank_distribution_functions", "rank_users_by_spend",
-        "sample_topk_per_group", "shuffle_deterministic",
-        "source_overlap_ngrams", "topk_terms_per_lang",
-        "train_val_split_stratified", "window_daily_distinct_users",
-    }
-)
-
-# Tier 1: failed-or-hardened this round — re-verify ahead of rotation.
-# STANDING RULE, sharpened per VERDICT r11 #3: any oracle query whose
-# execution kernel changed this round is FORCED into the next driver
-# window here rather than waiting its rotation turn — the builder's
-# strict gate re-checks values at both SFs the same day, but the
-# driver's independent row is the record the judge reads.
-_R13_REVERIFY: tuple[str, ...] = (
-    # VERDICT r12 #1: five oracle-backed queries whose execution kernels
-    # changed in r12 (commits 7a36196/5fecdda/35d134e) never landed an
-    # r12 driver row — _R12_REVERIFY was written before those commits
-    # widened the blast radius. Close the gap first.
-    "bm25_doc_search",
-    "importance_weight_dsir",
-    "doc_repetition_metrics",
-    "contamination_ngram_check",
-    "decontaminate_report",
-    # r12-kernel-touched queries that lacked an r12 driver row.
-    # scrub_repeated_spans was rows-only until r13 promoted it to a
-    # full DuckDB oracle (span-string grammar — see the oracle note in
-    # neardup.py), so its driver row is now a value check, exactly what
-    # VERDICT r12 #2 asked for on the slowest headline query.
-    # doc_winnow_fingerprint stays rows-only (xxhash64 fingerprints).
-    "scrub_repeated_spans",
+# Forced into the next driver window ahead of rotation: each entry's
+# kernel or output changed after its last green driver row.
+REVERIFY: tuple[str, ...] = (
+    # Fingerprints are now a space-joined string (the array column
+    # crashed the driver's canonicalization in r13); never green.
     "doc_winnow_fingerprint",
-    # VERDICT r12 #2/#5: dedup_text_minhash got the deepest r12 rework
-    # with zero independent driver verification. Its oracle-backed
-    # witness (neardup_minhash_verified) is re-forced in alongside it —
-    # r13 extends the witness to pin the single-aggregate collapse form
-    # the rows-only twin uses, so the witness row now covers the full
-    # kernel family (collapse + signature kernel + sets= verify).
+    # `reduced` is now a space-joined string, same canonicalization fix.
+    "embedding_pca_reduce",
+    # _banded_from_hs now explodes into the code-generated signature
+    # aggregate; these three queries run it.
     "dedup_text_minhash",
     "neardup_minhash_verified",
+    "neardup_incremental",
 )
 
 
 def _driver_order(names: list[str]) -> list[str]:
-    driver_seen = (
-        _R1_DRIVER_VERIFIED | _R2_DRIVER_VERIFIED | _R3_DRIVER_VERIFIED
-        | _R4_DRIVER_VERIFIED | _R5_DRIVER_VERIFIED | _R6_DRIVER_VERIFIED
-        | _R7_DRIVER_VERIFIED | _R8_DRIVER_VERIFIED | _R9_DRIVER_VERIFIED
-        | _R10_DRIVER_VERIFIED | _R11_DRIVER_VERIFIED | _R12_DRIVER_VERIFIED
-    )
-    reverify = {n: i for i, n in enumerate(_R13_REVERIFY)}
-    never_checked = [
-        n for n in names if n in ORACLES and n not in driver_seen and n not in reverify
-    ]
+    reverify = {n: i for i, n in enumerate(REVERIFY)}
+    rest = [n for n in names if n not in reverify]
+    never_checked = [n for n in rest if n in ORACLES and n not in LAST_GREEN]
     tier1 = sorted((n for n in names if n in reverify), key=reverify.__getitem__)
-    rest_oracle = [
-        n
-        for n in names
-        if n in ORACLES and n in driver_seen and n not in reverify
-    ]
-
-    # Oldest driver rows re-verify first: sort by the LATEST round in which
-    # the driver checked the query (r1-only rows are the stalest).
-    def last_verified(n: str) -> int:
-        if n in _R12_DRIVER_VERIFIED:
-            return 12
-        if n in _R11_DRIVER_VERIFIED:
-            return 11
-        if n in _R10_DRIVER_VERIFIED:
-            return 10
-        if n in _R9_DRIVER_VERIFIED:
-            return 9
-        if n in _R8_DRIVER_VERIFIED:
-            return 8
-        if n in _R7_DRIVER_VERIFIED:
-            return 7
-        if n in _R6_DRIVER_VERIFIED:
-            return 6
-        if n in _R5_DRIVER_VERIFIED:
-            return 5
-        if n in _R4_DRIVER_VERIFIED:
-            return 4
-        if n in _R3_DRIVER_VERIFIED:
-            return 3
-        if n in _R2_DRIVER_VERIFIED:
-            return 2
-        return 1
-
-    rest_oracle.sort(key=last_verified)
-    rows_only = [n for n in names if n not in ORACLES]
-    return never_checked + tier1 + rest_oracle + rows_only
+    # Stable sort: within a round, registration order.
+    stalest_first = sorted(
+        (n for n in rest if n in ORACLES and n in LAST_GREEN),
+        key=LAST_GREEN.__getitem__,
+    )
+    rows_only = [n for n in rest if n not in ORACLES]
+    return never_checked + tier1 + stalest_first + rows_only
 
 
 def get_queries() -> dict[str, QueryFn]:

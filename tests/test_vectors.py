@@ -215,19 +215,30 @@ def test_pca_reduce_contract(spark, sf_dir):
     projection never lengthens a vector; the reduced coordinates retain
     at least k/dim of the dataset variance (the random-ish fixture's
     spectrum is near-flat, so 8/64 is the honest floor); output is
-    deterministic across fits."""
+    deterministic across fits. ``reduced`` is a space-joined string of
+    the coordinates (an array column breaks the driver's
+    canonicalization); its tokens parse back to the reduced norm."""
+    import math
+
     import minefields_kafka_streams_deduplication_spark as engine
 
     q = engine.get_queries()["embedding_pca_reduce"]
     rows = q(spark, sf_dir).collect()
     assert rows
+    coords = {}
     for r in rows:
+        assert isinstance(r.reduced, str), type(r.reduced)
+        coords[r.vec_id] = [float(x) for x in r.reduced.split(" ")]
+        assert len(coords[r.vec_id]) == 8
+        assert math.isclose(
+            math.sqrt(sum(x * x for x in coords[r.vec_id])), r.reduced_norm,
+            rel_tol=1e-9, abs_tol=1e-12,
+        ), r.vec_id
         assert r.reduced_norm <= r.orig_norm + 1e-6, r.vec_id
-        assert len(r.reduced) == 8
 
     import statistics
 
-    by_dim = list(zip(*[r.reduced for r in rows]))
+    by_dim = list(zip(*coords.values()))
     var_reduced = sum(statistics.pvariance(d) for d in by_dim)
     # total variance of unit vectors around their mean is <= 1
     assert var_reduced >= 0.08, var_reduced

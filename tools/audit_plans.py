@@ -1,7 +1,7 @@
-"""Per-round physical-plan audit: prints a markdown table of
-scale-relevant plan facts for the headline queries.
+"""Physical-plan audit: prints a markdown table of scale-relevant plan
+facts for bench.py's headline queries, or for the named queries.
 
-Usage: python tools/audit_plans.py [sf_dir]
+Usage: python tools/audit_plans.py [sf_dir] [names...]
 """
 
 from __future__ import annotations
@@ -12,32 +12,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import minefields_kafka_streams_deduplication_spark as engine
+from bench import HEADLINE
 from minefields_kafka_streams_deduplication_spark.plans import audit_plan
-
-HEADLINE = [
-    "q1_pricing_summary",
-    "filter_purchases",
-    "latest_by_key",
-    "dedup_keep_first",
-    "dedup_windowed",
-    "join_orders_customer",
-    "join_broadcast_nation",
-    "join_interval_view_purchase",
-    "join_asof_latest_order_before_event",
-    "agg_revenue_by_user",
-    "agg_rollup_nation_region",
-    "window_tumbling_daily",
-    "window_session_sql",
-    "topk_products_by_revenue",
-    "token_frequency",
-    "dedup_text_exact",
-    "q5_local_supplier_volume",
-    "q7_nation_trade_volume",
-    "q10_returned_item_customers",
-    "q18_large_volume_orders",
-    "q19_disjunctive_predicates",
-    "q2_min_price_supplier",
-]
 
 
 def main() -> None:
