@@ -45,7 +45,7 @@ HEADLINE = [
     "token_frequency",           # V3 text tf
     "similarity_topk",           # V1 brute-force cosine top-k
     "q5_local_supplier_volume",  # 6-way join (broadcast dims + AQE)
-    "dedup_batch_custom_ttl",    # D5 batch twin (JVM TTL fold)
+    "dedup_batch_custom_ttl",    # D5 batch twin (shared TTL walk)
     "dedup_stream_watermark",    # D4 streaming dedup end-to-end
     # Round-2 continuation: LLM-pipeline ops promoted to headline.
     "importance_weight_dsir",    # DSIR data-selection LLR

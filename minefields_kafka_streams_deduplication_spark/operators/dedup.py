@@ -115,8 +115,8 @@ def dedup_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= W). This is the LAG formulation from SURVEY.md §2.3 — it models a
     window store whose entry is refreshed on every arrival (sliding
     TTL). The reference's put-only-on-forward variant (fixed TTL from
-    the last *kept* record) is inherently iterative and is implemented
-    as the streaming operator D5 (`streaming.dedup_stream`).
+    the last *kept* record) is inherently iterative; D5
+    (`streaming.dedup_stream`) runs it, as a stream and as a batch twin.
 
     Strict µs comparison on both sides: `unix_micros` diff here,
     `INTERVAL` arithmetic in DuckDB — identical because both readers

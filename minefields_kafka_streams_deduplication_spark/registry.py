@@ -79,6 +79,8 @@ REVERIFY: tuple[str, ...] = (
     "dedup_text_minhash",
     "neardup_minhash_verified",
     "neardup_incremental",
+    # The SQL fold is gone; the batch twin now runs the stream's TTL walk.
+    "dedup_batch_custom_ttl",
 )
 
 

@@ -83,11 +83,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a local session sized for this machine."""
     cpus = _cpus()
+    # Driver heap: 24g, or 3/4 of physical RAM in whole GiB if that is less.
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or f"{min(24, ram * 3 // 4 // 2**30)}g"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config(
             "spark.driver.extraJavaOptions",

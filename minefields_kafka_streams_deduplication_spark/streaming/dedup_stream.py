@@ -14,7 +14,8 @@ laid out like a Kafka Streams task's store: one state row per fixed
 hash bucket of the TTL key (`TTL_STATE_BUCKETS`, frozen into the
 checkpoint), holding that bucket's key → last-forwarded-time map, so
 PySpark pays its per-group cost once per bucket rather than per key.
-A touched bucket rewrites its whole key map each micro-batch.
+A touched bucket rewrites its whole key map each micro-batch. The
+batch twin runs the same automaton (`_ttl_walk`) under `mapInPandas`.
 """
 
 from __future__ import annotations
@@ -80,25 +81,13 @@ def ttl_bucket() -> F.Column:
     return F.pmod(F.hash(*TTL_KEY), F.lit(TTL_STATE_BUCKETS))
 
 
-def _dedup_ttl_fn(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Reference transformer semantics [R], run for every key of one
-    state bucket: forward a record iff no record of the same
-    (user_id, event_type) was FORWARDED within the TTL; record the
-    forwarded timestamp (put-only-on-forward).
-
-    The state row holds the bucket's key map as parallel arrays
-    (user_id, event_type, last_kept_us). The bucket's rows arrive as
-    several Arrow chunks once they exceed arrow.maxRecordsPerBatch, so
-    they are concatenated before the one event-time sort."""
+def _ttl_walk(pdf: pd.DataFrame, last_kept: dict) -> np.ndarray:
+    """Reference transformer semantics [R], the one D5 automaton: over
+    rows sorted on (user_id, event_type, ts_us, event_id), forward a
+    record iff no record of the same key was FORWARDED within the TTL,
+    and record the forwarded timestamp in `last_kept` (put-only-on-
+    forward; the dict is updated in place). Returns the keep mask."""
     ttl_us = TTL_MINUTES * 60 * 1_000_000
-    users, types, lasts = state.get if state.exists else ([], [], [])
-    last_kept = dict(zip(zip(users, types), lasts))
-    cols = ["event_id", "ts_us", "user_id", "event_type", "value"]
-    pdf = pd.concat([c[cols] for c in pdfs], ignore_index=True).sort_values(
-        [*TTL_KEY, "ts_us", "event_id"], ignore_index=True
-    )
     uids = pdf["user_id"].tolist()
     if pdf["user_id"].hasnans:  # a null user_id arrives as NaN in a float column
         uids = [None if u != u else int(u) for u in uids]
@@ -110,6 +99,26 @@ def _dedup_ttl_fn(
         if last is None or ts - last > ttl_us:
             keep[i] = True
             last_kept[k] = ts
+    return keep
+
+
+def _dedup_ttl_fn(
+    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """The stream's state function: `_ttl_walk` over every key of one
+    state bucket, starting from the bucket's stored key map.
+
+    The state row holds the bucket's key map as parallel arrays
+    (user_id, event_type, last_kept_us). The bucket's rows arrive as
+    several Arrow chunks once they exceed arrow.maxRecordsPerBatch, so
+    they are concatenated before the one event-time sort."""
+    users, types, lasts = state.get if state.exists else ([], [], [])
+    last_kept = dict(zip(zip(users, types), lasts))
+    cols = ["event_id", "ts_us", "user_id", "event_type", "value"]
+    pdf = pd.concat([c[cols] for c in pdfs], ignore_index=True).sort_values(
+        [*TTL_KEY, "ts_us", "event_id"], ignore_index=True
+    )
+    keep = _ttl_walk(pdf, last_kept)
     state.update(
         (
             [u for u, _ in last_kept],
@@ -118,6 +127,16 @@ def _dedup_ttl_fn(
         )
     )
     yield pdf[keep]
+
+
+def _dedup_ttl_partition(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The batch twin's partition function: `_ttl_walk` over a partition
+    already sorted on the walk's order. One `last_kept` dict spans all
+    of the partition's Arrow chunks, so a key that straddles chunks is
+    still walked as one sequence."""
+    last_kept: dict = {}
+    for pdf in pdfs:
+        yield pdf[_ttl_walk(pdf, last_kept)]
 
 
 def dedup_ttl_stream(events: DataFrame) -> DataFrame:
@@ -177,52 +196,23 @@ def dedup_stream_custom_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("dedup_batch_custom_ttl")  # rows-only: iterative semantics, not SQL-expressible
 def dedup_batch_custom_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D5 batch twin: the same put-only-on-forward TTL dedup over
-    historical data — used by tests to prove batch/stream parity.
+    historical data, run by the stream's own automaton (`_ttl_walk`).
 
-    Implemented as a pure-JVM sequential fold: collect each key's
-    (ts, id, payload) structs sorted, run the TTL automaton with a
-    higher-order `aggregate`, and explode the survivors WITH their
-    payload — no join-back pass at all. The iterative
-    last-KEPT-timestamp policy is exactly what SQL window functions
-    cannot express (SURVEY.md §2.3 D3 note) but an ordered fold can —
-    no Python workers, ONE shuffle total, and per-key arrays are
-    bounded by events-per-key. (A previous form folded ids only and
-    semi-joined survivors back; survivors are proportional to input,
-    so that second shuffle dominated — measured 2.8 s → 0.8 s at
-    sf0.1 by carrying the payload through the fold.)
+    The iterative last-KEPT-timestamp policy is what SQL window
+    functions cannot express (SURVEY.md §2.3 D3 note). One shuffle
+    places each key in one partition, the partition is sorted on the
+    walk's order, and `mapInPandas` walks it: linear in a key's events,
+    whatever share of them is forwarded.
     """
     from ..catalog import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.unix_micros("ts").alias("ts_us"), "user_id", "event_type", "value"
     )
-    ttl_us = TTL_MINUTES * 60 * 1_000_000
-    kept_t = "array<struct<ts_us:bigint,event_id:bigint,value:double>>"
     return (
-        ev.groupBy(*TTL_KEY)
-        .agg(
-            F.array_sort(F.collect_list(F.struct("ts_us", "event_id", "value"))).alias(
-                "arr"
-            )
-        )
-        .select(
-            "user_id",
-            "event_type",
-            F.explode(
-                F.expr(
-                    f"""
-                    aggregate(
-                      arr,
-                      struct(cast(null as bigint) as last, cast(array() as {kept_t}) as kept),
-                      (acc, x) -> IF(acc.last IS NULL OR x.ts_us - acc.last > {ttl_us},
-                                     struct(x.ts_us as last, array_append(acc.kept, x) as kept),
-                                     acc),
-                      acc -> acc.kept)
-                    """
-                )
-            ).alias("k"),
-        )
-        .select("k.event_id", "k.ts_us", "user_id", "event_type", "k.value")
+        ev.repartition(*TTL_KEY)
+        .sortWithinPartitions(*TTL_KEY, "ts_us", "event_id")
+        .mapInPandas(_dedup_ttl_partition, DEDUP_TTL_OUTPUT_SCHEMA)
     )
 
 

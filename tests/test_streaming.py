@@ -10,7 +10,26 @@ import pytest
 import minefields_kafka_streams_deduplication_spark as engine
 from minefields_kafka_streams_deduplication_spark.streaming.dedup_stream import (
     BUSINESS_KEY,
+    TTL_MINUTES,
 )
+
+
+def _ttl_reference(rows) -> list[int]:
+    """Independent put-only-on-forward reference over (event_id, ts_us,
+    user_id, event_type) tuples: per (user_id, event_type) key, a NULL
+    user_id being a key of its own, walk the events in (ts_us, event_id)
+    order and keep one iff nothing of its key was KEPT within the TTL."""
+    by_key: dict = {}
+    for eid, ts_us, user, etype in rows:
+        by_key.setdefault((user, etype), []).append((ts_us, eid))
+    kept = []
+    for events in by_key.values():
+        last = None
+        for ts_us, eid in sorted(events):
+            if last is None or ts_us - last > TTL_MINUTES * 60 * 1_000_000:
+                kept.append(eid)
+                last = ts_us
+    return sorted(kept)
 
 
 @pytest.fixture(scope="module")
@@ -43,6 +62,14 @@ def test_custom_ttl_stream_runs(spark, sf_dir):
 
 
 def test_custom_ttl_batch_stream_parity(spark, sf_dir):
+    """Batch and stream run the same walk, so each is checked against
+    the independent reference, not only against the other."""
+    from minefields_kafka_streams_deduplication_spark.catalog import load_table
+
+    events = load_table(spark, sf_dir, "events").selectExpr(
+        "event_id", "unix_micros(ts)", "user_id", "event_type"
+    )
+    want = _ttl_reference(tuple(r) for r in events.collect())
     stream_ids = sorted(
         r.event_id
         for r in engine.get_queries()["dedup_stream_custom_ttl"](spark, sf_dir).collect()
@@ -51,7 +78,8 @@ def test_custom_ttl_batch_stream_parity(spark, sf_dir):
         r.event_id
         for r in engine.get_queries()["dedup_batch_custom_ttl"](spark, sf_dir).collect()
     )
-    assert stream_ids == batch_ids
+    assert stream_ids == want
+    assert batch_ids == want
 
 
 def test_windowed_stream_aggregation(spark, sf_dir):
@@ -61,23 +89,27 @@ def test_windowed_stream_aggregation(spark, sf_dir):
 
 
 def test_custom_ttl_key_straddling_arrow_chunks(spark, tmp_path):
-    """A TTL key whose micro-batch rows span several Arrow chunks
+    """A TTL key whose rows span several Arrow chunks
     (arrow.maxRecordsPerBatch) must still be walked in event-time
-    order: one key of 120 events, written in REVERSE event-time order,
-    split into 50-row chunks, must keep exactly the batch twin's
-    survivors. Sorting each chunk on its own (the old per-key kernel)
-    forwards the latest chunk first and drops everything earlier."""
-    import datetime as dt
-
+    order, by the stream (one bucket's chunks arrive in arbitrary
+    order) and by the batch twin (one partition's chunks carry the
+    key map forward). Inputs, written in REVERSE event-time order and
+    split into 50-row chunks: one key of 120 events 4 min apart, a key
+    of 3,000 events 31 min apart (every one forwarded), a pair with
+    equal ts (the smaller event_id wins), and a NULL-user key."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-    n = 120
-    rows = [(i, t0 + dt.timedelta(minutes=7 * i), 1, "click", float(i)) for i in range(n)]
-    rows += [(n + i, t0 + dt.timedelta(minutes=13 * i), 2, "view", 0.0) for i in range(10)]
-    # A null user_id is one key of its own, as in the batch twin's groupBy.
-    rows += [(n + 10 + i, t0 + dt.timedelta(minutes=10 * i), None, "view", 0.0) for i in range(5)]
+    t0, minute = 1_704_067_200_000_000, 60_000_000  # 2024-01-01 UTC, in µs
+    n, n_long = 120, 3000
+    # 4 min apart, a kept row every 8: the period does not divide the
+    # 50-row chunk, so resetting the key map at a chunk forwards extra rows.
+    rows = [(i, t0 + 4 * i * minute, 1, "click") for i in range(n)]
+    rows += [(n + i, t0 + 13 * i * minute, 2, "view") for i in range(10)]
+    # A null user_id is one key of its own, as in a SQL GROUP BY.
+    rows += [(n + 10 + i, t0 + 10 * i * minute, None, "view") for i in range(5)]
+    rows += [(1000 + i, t0 + 31 * i * minute, 3, "click") for i in range(n_long)]
+    rows += [(9001, t0, 4, "view"), (9000, t0, 4, "view")]
     rows.reverse()
     cols = list(zip(*rows))
     table = pa.table(
@@ -86,7 +118,7 @@ def test_custom_ttl_key_straddling_arrow_chunks(spark, tmp_path):
             "ts": pa.array(cols[1], pa.timestamp("us", tz="UTC")),
             "user_id": pa.array(cols[2], pa.int64()),
             "event_type": pa.array(cols[3], pa.string()),
-            "value": pa.array(cols[4], pa.float64()),
+            "value": pa.array([float(r[0]) for r in rows], pa.float64()),
         }
     )
     sf = str(tmp_path / "sf")
@@ -97,18 +129,20 @@ def test_custom_ttl_key_straddling_arrow_chunks(spark, tmp_path):
     prev = spark.conf.get(key)
     spark.conf.set(key, "50")
     try:
-        stream_ids = sorted(
-            r.event_id
-            for r in engine.get_queries()["dedup_stream_custom_ttl"](spark, sf).collect()
-        )
+        got = {
+            name: sorted(
+                r.event_id for r in engine.get_queries()[name](spark, sf).collect()
+            )
+            for name in ("dedup_stream_custom_ttl", "dedup_batch_custom_ttl")
+        }
     finally:
         spark.conf.set(key, prev)
-    batch_ids = sorted(
-        r.event_id for r in engine.get_queries()["dedup_batch_custom_ttl"](spark, sf).collect()
-    )
-    # every 5th click (35 min), every 3rd view (39 min), null-user views at 0 and 40 min
-    assert len(batch_ids) == 24 + 4 + 2
-    assert stream_ids == batch_ids
+    want = _ttl_reference(rows)
+    # every 8th click (32 min), every 3rd view (39 min), null-user views
+    # at 0 and 40 min, every long-key event, the pair's smaller id
+    assert len(want) == 15 + 4 + 2 + n_long + 1 and 9000 in want
+    assert got["dedup_stream_custom_ttl"] == want
+    assert got["dedup_batch_custom_ttl"] == want
 
 
 def test_full_outer_stream_join_emits_both_side_nulls(spark, sf_dir):
