@@ -119,7 +119,12 @@ def _collapsed_rep_jaccard(docs: DataFrame):
       un-thresholded): every rep pair sharing ≥1 shingle.
 
     The window-form collapse (r6): ONE exchange on the text hash
-    serves member map and rep filter through ReuseExchange."""
+    serves member map and rep filter through ReuseExchange. It stays
+    here rather than `_winner_collapse` + `_member_map`: every caller
+    needs the full member map, and that form, row-identical, was
+    slower for jaccard (min of 5, interleaved, 4 cores): 2.14 → 2.28 s
+    at sf0.1 and 1.92 → 2.08 s with every document copied 10 times;
+    cc was unchanged (6.12 vs 6.20 s, 6.65 vs 6.63 s)."""
     from pyspark.sql import Window
 
     flagged = docs.select("doc_id", "text").withColumn(
@@ -150,6 +155,42 @@ def _collapsed_rep_jaccard(docs: DataFrame):
         .select("rep_1", "rep_2", "n_common", jac.alias("jac"))
     )
     return members, counts, rep_pairs
+
+
+def expand_pairs(
+    rep_pairs: DataFrame,
+    members: DataFrame,
+    value: str,
+    self_value,
+    gate: DataFrame | None = None,
+) -> DataFrame:
+    """``(rep_1, rep_2, <value>)`` rep pairs → ``(doc_id_1 < doc_id_2,
+    <value>)`` doc pairs via the ``(doc_id, rep_id)`` member map: member ×
+    member cross pairs at the reps' value, plus within-group pairs at
+    ``self_value`` for groups whose rep is in ``gate`` (a ``doc_id``
+    frame; ``None`` = every group)."""
+    m1 = members.select(F.col("rep_id").alias("rep_1"), F.col("doc_id").alias("d1"))
+    m2 = members.select(F.col("rep_id").alias("rep_2"), F.col("doc_id").alias("d2"))
+    cross = rep_pairs.join(m1, "rep_1").join(m2, "rep_2").select(
+        F.least("d1", "d2").alias("doc_id_1"),
+        F.greatest("d1", "d2").alias("doc_id_2"),
+        value,
+    )
+    g1 = members
+    if gate is not None:
+        g1 = members.join(gate.select(F.col("doc_id").alias("rep_id")), "rep_id")
+    g1 = g1.select("rep_id", F.col("doc_id").alias("d1"))
+    g2 = members.select("rep_id", F.col("doc_id").alias("d2"))
+    within = (
+        g1.join(g2, "rep_id")
+        .filter(F.col("d1") < F.col("d2"))
+        .select(
+            F.col("d1").alias("doc_id_1"),
+            F.col("d2").alias("doc_id_2"),
+            F.lit(self_value).alias(value),
+        )
+    )
+    return cross.unionByName(within)
 
 
 @query(
@@ -189,33 +230,7 @@ def dedup_text_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_pairs = raw_pairs.filter(F.col("jac") >= JACCARD_THRESHOLD).select(
         "rep_1", "rep_2", F.round(F.col("jac"), 4).alias("jaccard")
     )
-    # Expand cross-group pairs: every (member of rep_1) × (member of rep_2).
-    m1 = members.select(F.col("rep_id").alias("rep_1"), F.col("doc_id").alias("d1"))
-    m2 = members.select(F.col("rep_id").alias("rep_2"), F.col("doc_id").alias("d2"))
-    cross = rep_pairs.join(m1, "rep_1").join(m2, "rep_2").select(
-        F.least("d1", "d2").alias("doc_id_1"),
-        F.greatest("d1", "d2").alias("doc_id_2"),
-        "jaccard",
-    )
-    # Within-group pairs: exact copies, jaccard 1.0 by construction.
-    # Restricted to groups whose representative HAS shingles — a doc
-    # with <3 tokens joins nothing in the inverted index, so the
-    # reference formulation emits no pair for its copies either.
-    shingled_reps = counts.select(F.col("doc_id").alias("rep_id"))
-    g1 = members.join(shingled_reps, "rep_id").select(
-        "rep_id", F.col("doc_id").alias("d1")
-    )
-    g2 = members.select("rep_id", F.col("doc_id").alias("d2"))
-    within = (
-        g1.join(g2, "rep_id")
-        .filter(F.col("d1") < F.col("d2"))
-        .select(
-            F.col("d1").alias("doc_id_1"),
-            F.col("d2").alias("doc_id_2"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(within)
+    return expand_pairs(rep_pairs, members, "jaccard", 1.0, gate=counts)
 
 
 import functools
@@ -535,6 +550,15 @@ def _winner_collapse(docs: DataFrame, payload: tuple[str, ...], norm=None):
     return nh_docs, winners
 
 
+def _member_map(nh_docs: DataFrame, winners: DataFrame) -> DataFrame:
+    """``(doc_id, rep_id)`` for every doc of a `_winner_collapse`."""
+    return (
+        nh_docs.select("doc_id", "nh")
+        .join(winners.select("nh", F.col("doc_id").alias("rep_id")), "nh")
+        .select("doc_id", "rep_id")
+    )
+
+
 @query("dedup_text_minhash")  # rows-only: xxhash64 values are engine-specific
 def dedup_text_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup dedup: MINHASH_PERMS minhashes per doc
@@ -663,16 +687,10 @@ def neardup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The aggregate partial-aggregates map-side (≤ one winner-candidate
     # text per distinct text per map task crosses the exchange), where
     # the previous window form shipped EVERY copy's text; the member→rep
-    # map costs one extra narrow (doc_id, nh) exchange — the winners
-    # side reuses the aggregate's hash partitioning on nh.
+    # map costs one extra narrow (doc_id, nh) exchange.
     nh_docs, winners = _winner_collapse(docs.select("doc_id", "text"), payload=("text",))
     reps = winners.select("doc_id", "text")
-    members = (
-        nh_docs.select("doc_id", "nh")
-        .join(winners.select("nh", F.col("doc_id").alias("rep_id")), "nh")
-        .select("doc_id", "rep_id")
-        .cache()
-    )
+    members = _member_map(nh_docs, winners).cache()
 
     # Per-rep shingle STRING array: signatures hash it with
     # `transform(sh, xxhash64)` and fold through `_banded_from_hs` (one
@@ -712,36 +730,11 @@ def neardup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("rep_1", "rep_2", F.round("jaccard", 4).alias("jaccard"))
     )
 
-    # Expand cross-group pairs: every (member of rep_1) × (member of rep_2).
-    m1 = members.select(F.col("rep_id").alias("rep_1"), F.col("doc_id").alias("d1"))
-    m2 = members.select(F.col("rep_id").alias("rep_2"), F.col("doc_id").alias("d2"))
-    cross = rep_pairs.join(m1, "rep_1").join(m2, "rep_2").select(
-        F.least("d1", "d2").alias("doc_id_1"),
-        F.greatest("d1", "d2").alias("doc_id_2"),
-        "jaccard",
+    # Within-group pairs (Jaccard 1.0) need no LSH collision; the gate
+    # reads shingle presence off the cached shingle-array frame.
+    return expand_pairs(
+        rep_pairs, members, "jaccard", 1.0, gate=sarr.where(F.size("sh") > 0)
     )
-    # Within-group pairs: exact copies, Jaccard 1.0 by construction —
-    # independent of the LSH candidate set (a multi-member group needs
-    # no collision to be a true pair set). Gated on the rep actually
-    # having shingles (<3 tokens ⇒ no shingles ⇒ no oracle pair) —
-    # read off the cached shingle-array frame.
-    shingled_reps = sarr.where(F.size("sh") > 0).select(
-        F.col("doc_id").alias("rep_id")
-    )
-    g1 = members.join(shingled_reps, "rep_id").select(
-        "rep_id", F.col("doc_id").alias("d1")
-    )
-    g2 = members.select("rep_id", F.col("doc_id").alias("d2"))
-    within = (
-        g1.join(g2, "rep_id")
-        .filter(F.col("d1") < F.col("d2"))
-        .select(
-            F.col("d1").alias("doc_id_1"),
-            F.col("d2").alias("doc_id_2"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(within)
 
 
 CC_MAX_ITERS = 20
@@ -831,8 +824,8 @@ def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingles forms within-pairs (jaccard 1.0) even with no cross-group
     # edge — in the expanded doc graph those members were nodes. A rep
     # with <3 tokens has no shingles, joins nothing, and its copies
-    # produced no pair in the expanded form either (the
-    # dedup_text_ngram_jaccard within-gate), so it stays excluded.
+    # produced no pair in the expanded form either (`expand_pairs`'
+    # gate), so it stays excluded.
     gsz = members.groupBy("rep_id").agg(F.count(F.lit(1)).alias("gsz"))
     iso = (
         gsz.filter(F.col("gsz") >= 2)
@@ -938,12 +931,7 @@ def dedup_text_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     nh_docs, winners = _winner_collapse(docs.select("doc_id", "text"), payload=("text",))
     reps = winners.select("doc_id", "text")
-    members = (
-        nh_docs.select("doc_id", "nh")
-        .join(winners.select("nh", F.col("doc_id").alias("rep_id")), "nh")
-        .select("doc_id", "rep_id")
-        .cache()
-    )
+    members = _member_map(nh_docs, winners).cache()
     sh = _shingles(reps)
     hashed = sh.select(
         "doc_id",
@@ -972,68 +960,41 @@ def dedup_text_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     fps = sums.select("doc_id", fp_col.alias("simhash"))
-    # Pigeonhole banding: 4 chunks of 16 bits; dist<=3 ⇒ >=1 chunk equal.
+    # Copies share their rep's fingerprint, so a member pair's hamming IS
+    # its reps' hamming; copies of a rep with no fingerprint (<3 tokens)
+    # pair with nothing.
+    rep_pairs = banded_hamming_pairs(fps, "simhash", SIMHASH_MAX_HAMMING)
+    return expand_pairs(rep_pairs, members, "hamming", 0, gate=fps)
+
+
+def banded_hamming_pairs(sigs: DataFrame, sig: str, max_hamming: int) -> DataFrame:
+    """``(doc_id, <sig>)`` 64-bit signatures → ``(rep_1 < rep_2, hamming ≤
+    max_hamming)`` by a 4×16-bit chunk equi-join, Hamming-verified on
+    candidates only. Complete up to distance 3 (pigeonhole: a shared
+    chunk); wider pairs are found only if a chunk collides."""
     chunks = F.array(
         *[
             F.struct(
                 F.lit(c).alias("chunk"),
-                F.shiftright(F.col("simhash"), c * 16).bitwiseAND(F.lit(0xFFFF)).alias("cval"),
+                F.shiftright(F.col(sig), c * 16).bitwiseAND(F.lit(0xFFFF)).alias("cval"),
             )
             for c in range(4)
         ]
     )
-    chunked = fps.select("doc_id", "simhash", F.explode(chunks).alias("cc")).select(
-        "doc_id", "simhash", F.col("cc.chunk").alias("chunk"), F.col("cc.cval").alias("cval")
+    chunked = sigs.select("doc_id", sig, F.explode(chunks).alias("cc")).select(
+        "doc_id", sig, F.col("cc.chunk").alias("chunk"), F.col("cc.cval").alias("cval")
     )
-    x = chunked.select(
-        F.col("chunk"), F.col("cval"),
-        F.col("doc_id").alias("rep_1"), F.col("simhash").alias("sh1"),
-    )
-    y = chunked.select(
-        F.col("chunk"), F.col("cval"),
-        F.col("doc_id").alias("rep_2"), F.col("simhash").alias("sh2"),
-    )
-    rep_pairs = (
+    x = chunked.select("chunk", "cval", F.col("doc_id").alias("rep_1"), F.col(sig).alias("s1"))
+    y = chunked.select("chunk", "cval", F.col("doc_id").alias("rep_2"), F.col(sig).alias("s2"))
+    return (
         x.join(y, ["chunk", "cval"])
         .filter(F.col("rep_1") < F.col("rep_2"))
-        .select("rep_1", "rep_2", "sh1", "sh2")
+        .select("rep_1", "rep_2", "s1", "s2")
         .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
+        .withColumn("hamming", F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))))
+        .filter(F.col("hamming") <= max_hamming)
         .select("rep_1", "rep_2", "hamming")
     )
-    # Expand cross-group pairs (the dedup_text_ngram_jaccard pattern):
-    # copies share their rep's fingerprint, so a member pair's hamming
-    # IS its reps' hamming.
-    m1 = members.select(F.col("rep_id").alias("rep_1"), F.col("doc_id").alias("d1"))
-    m2 = members.select(F.col("rep_id").alias("rep_2"), F.col("doc_id").alias("d2"))
-    cross = rep_pairs.join(m1, "rep_1").join(m2, "rep_2").select(
-        F.least("d1", "d2").alias("doc_id_1"),
-        F.greatest("d1", "d2").alias("doc_id_2"),
-        "hamming",
-    )
-    # Within-group pairs: exact copies → hamming 0 by construction —
-    # gated on the rep actually HAVING a fingerprint (<3 tokens ⇒ no
-    # shingles ⇒ no fingerprint ⇒ the uncollapsed form emitted no pair
-    # for its copies either).
-    fp_reps = fps.select(F.col("doc_id").alias("rep_id"))
-    g1 = members.join(fp_reps, "rep_id").select(
-        "rep_id", F.col("doc_id").alias("d1")
-    )
-    g2 = members.select("rep_id", F.col("doc_id").alias("d2"))
-    within = (
-        g1.join(g2, "rep_id")
-        .filter(F.col("d1") < F.col("d2"))
-        .select(
-            F.col("d1").alias("doc_id_1"),
-            F.col("d2").alias("doc_id_2"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return cross.unionByName(within)
 
 
 BENCHMARK_DOC_CUTOFF = 20  # doc_id < 20 stands in for the held-out eval set
@@ -2032,9 +1993,7 @@ def doc_novelty_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     nh_docs, winners = _winner_collapse(
         docs.select("doc_id", "text"), payload=("text",), norm=F.lower(F.col("text"))
     )
-    members = nh_docs.select("doc_id", "nh").join(
-        winners.select("nh", F.col("doc_id").alias("rep_id")), "nh"
-    )
+    members = _member_map(nh_docs, winners)
     sh = _shingles(winners.select("doc_id", "text")).cache()
     firsts = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = F.sum(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.neardup import banded_hamming_pairs, expand_pairs
 from ..registry import query
 
 DECODED_SCHEMA = (
@@ -641,14 +642,13 @@ def dct_phash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame({"doc_id": ids, "phash": sigs})
 
 
-def _collapsed_sig_chunks(payloads: DataFrame, batches_fn=phash_batches):
-    """Shared candidate machinery of phash_pairs / phash_keep_first:
-    hash every image (``batches_fn`` picks the signature — aHash or
-    DCT pHash), collapse identical signatures to their min-doc
-    representative (the exact-copy-flood rule), and band the DISTINCT
-    signatures into 4×16-bit chunk rows. Returns (members, chunked):
-    members = (doc_id, rep_id) for the expansion joins, chunked =
-    (doc_id, phash, chunk, cval) over representatives only."""
+def _collapsed_sigs(payloads: DataFrame, batches_fn=phash_batches):
+    """Shared collapse of phash_pairs / phash_keep_first: hash every
+    image (``batches_fn`` picks the signature — aHash or DCT pHash) and
+    collapse identical signatures to their min-doc representative (the
+    exact-copy-flood rule). Returns (members, reps): members =
+    (doc_id, rep_id) for the expansion joins, reps = (doc_id, phash)
+    over representatives only."""
     from pyspark.sql import Window
 
     sigs = payloads.mapInPandas(batches_fn, "doc_id LONG, phash LONG")
@@ -658,24 +658,7 @@ def _collapsed_sig_chunks(payloads: DataFrame, batches_fn=phash_batches):
     reps = flagged.filter(F.col("doc_id") == F.col("rep_id")).select(
         "doc_id", "phash"
     )
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftright(F.col("phash"), c * 16)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("cval"),
-            )
-            for c in range(4)
-        ]
-    )
-    chunked = reps.select("doc_id", "phash", F.explode(chunks).alias("cc")).select(
-        "doc_id",
-        "phash",
-        F.col("cc.chunk").alias("chunk"),
-        F.col("cc.cval").alias("cval"),
-    )
-    return flagged.select("doc_id", "rep_id"), chunked
+    return flagged.select("doc_id", "rep_id"), reps
 
 
 def phash_pairs(payloads: DataFrame, batches_fn=phash_batches) -> DataFrame:
@@ -699,45 +682,9 @@ def phash_pairs(payloads: DataFrame, batches_fn=phash_batches) -> DataFrame:
     as Hamming-0 pairs) — output-sized work, which pairs inherently
     are.
     """
-    members, chunked = _collapsed_sig_chunks(payloads, batches_fn)
-    x = chunked.select(
-        "chunk", "cval", F.col("doc_id").alias("rep_1"), F.col("phash").alias("p1")
-    )
-    y = chunked.select(
-        "chunk", "cval", F.col("doc_id").alias("rep_2"), F.col("phash").alias("p2")
-    )
-    rep_pairs = (
-        x.join(y, ["chunk", "cval"])
-        .filter(F.col("rep_1") < F.col("rep_2"))
-        .select("rep_1", "rep_2", "p1", "p2")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("p1").bitwiseXOR(F.col("p2"))))
-        .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
-        .select("rep_1", "rep_2", "hamming")
-    )
-    m1 = members.select(F.col("rep_id").alias("rep_1"), F.col("doc_id").alias("d1"))
-    m2 = members.select(F.col("rep_id").alias("rep_2"), F.col("doc_id").alias("d2"))
-    cross = (
-        rep_pairs.join(m1, "rep_1")
-        .join(m2, "rep_2")
-        .select(
-            F.least("d1", "d2").alias("doc_id_1"),
-            F.greatest("d1", "d2").alias("doc_id_2"),
-            "hamming",
-        )
-    )
-    g1 = members.select("rep_id", F.col("doc_id").alias("d1"))
-    g2 = members.select("rep_id", F.col("doc_id").alias("d2"))
-    within = (
-        g1.join(g2, "rep_id")
-        .filter(F.col("d1") < F.col("d2"))
-        .select(
-            F.col("d1").alias("doc_id_1"),
-            F.col("d2").alias("doc_id_2"),
-            F.lit(0).alias("hamming"),
-        )
-    )
-    return cross.unionByName(within)
+    members, reps = _collapsed_sigs(payloads, batches_fn)
+    rep_pairs = banded_hamming_pairs(reps, "phash", PHASH_MAX_HAMMING)
+    return expand_pairs(rep_pairs, members, "hamming", 0)
 
 
 @query("multimodal_phash_dedup_bmp")  # rows-only: signatures are impl-specific
@@ -787,23 +734,10 @@ def phash_keep_first(payloads: DataFrame) -> DataFrame:
     join → Hamming verify), so the two stay in lockstep; parity with
     the pair form is pinned in tests/test_multimodal.py (survivors ==
     docs with no pair to a smaller doc)."""
-    members, chunked = _collapsed_sig_chunks(payloads)
-    reps = members.filter(F.col("doc_id") == F.col("rep_id")).join(
-        chunked.select("doc_id", "phash").distinct(), "doc_id"
-    ).select("doc_id", "phash")
-    x = chunked.select(
-        "chunk", "cval", F.col("doc_id").alias("rep_1"), F.col("phash").alias("p1")
-    )
-    y = chunked.select(
-        "chunk", "cval", F.col("doc_id").alias("rep_2"), F.col("phash").alias("p2")
-    )
+    _, reps = _collapsed_sigs(payloads)
     # reps dominated by a verified smaller near-dup rep
     dominated = (
-        x.join(y, ["chunk", "cval"])
-        .filter(F.col("rep_2") > F.col("rep_1"))
-        .filter(
-            F.bit_count(F.col("p1").bitwiseXOR(F.col("p2"))) <= PHASH_MAX_HAMMING
-        )
+        banded_hamming_pairs(reps, "phash", PHASH_MAX_HAMMING)
         .select(F.col("rep_2").alias("doc_id"))
         .distinct()
     )

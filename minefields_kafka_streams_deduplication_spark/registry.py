@@ -81,6 +81,10 @@ REVERIFY: tuple[str, ...] = (
     "neardup_incremental",
     # The SQL fold is gone; the batch twin now runs the stream's TTL walk.
     "dedup_batch_custom_ttl",
+    # Pair expansion, member map and Hamming join now run shared code.
+    "dedup_text_ngram_jaccard",
+    "dedup_text_simhash",
+    "doc_novelty_ngrams",
 )
 
 

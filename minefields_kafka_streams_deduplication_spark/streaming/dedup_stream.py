@@ -86,7 +86,16 @@ def _ttl_walk(pdf: pd.DataFrame, last_kept: dict) -> np.ndarray:
     rows sorted on (user_id, event_type, ts_us, event_id), forward a
     record iff no record of the same key was FORWARDED within the TTL,
     and record the forwarded timestamp in `last_kept` (put-only-on-
-    forward; the dict is updated in place). Returns the keep mask."""
+    forward; the dict is updated in place). Returns the keep mask.
+
+    A row with no event time (NULL `ts`, NaN here) cannot be judged
+    against a TTL: it is forwarded and never recorded, wherever the
+    sort placed it."""
+    if pdf["ts_us"].hasnans:
+        has_ts = pdf["ts_us"].notna().to_numpy()
+        keep = np.ones(len(pdf), dtype=bool)
+        keep[has_ts] = _ttl_walk(pdf[has_ts].astype({"ts_us": "int64"}), last_kept)
+        return keep
     ttl_us = TTL_MINUTES * 60 * 1_000_000
     uids = pdf["user_id"].tolist()
     if pdf["user_id"].hasnans:  # a null user_id arrives as NaN in a float column
@@ -185,6 +194,10 @@ def dedup_stream_custom_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id, event_type, last_kept_us) entry per live key in at most
     TTL_STATE_BUCKETS rows; the bucket count is frozen into the
     checkpoint.
+
+    A record with a NULL `ts` is forwarded and never becomes its key's
+    last-forwarded time, in the stream and in `dedup_batch_custom_ttl`
+    alike: with no event time it cannot be inside or outside a TTL.
     """
     deduped = dedup_ttl_stream(read_events_stream(spark, sf_dir))
     # Python-state ops are worker-CPU-bound: give them a worker per core

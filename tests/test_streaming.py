@@ -18,11 +18,15 @@ def _ttl_reference(rows) -> list[int]:
     """Independent put-only-on-forward reference over (event_id, ts_us,
     user_id, event_type) tuples: per (user_id, event_type) key, a NULL
     user_id being a key of its own, walk the events in (ts_us, event_id)
-    order and keep one iff nothing of its key was KEPT within the TTL."""
+    order and keep one iff nothing of its key was KEPT within the TTL.
+    A NULL ts_us is kept and never recorded."""
     by_key: dict = {}
-    for eid, ts_us, user, etype in rows:
-        by_key.setdefault((user, etype), []).append((ts_us, eid))
     kept = []
+    for eid, ts_us, user, etype in rows:
+        if ts_us is None:
+            kept.append(eid)
+        else:
+            by_key.setdefault((user, etype), []).append((ts_us, eid))
     for events in by_key.values():
         last = None
         for ts_us, eid in sorted(events):
@@ -96,7 +100,8 @@ def test_custom_ttl_key_straddling_arrow_chunks(spark, tmp_path):
     key map forward). Inputs, written in REVERSE event-time order and
     split into 50-row chunks: one key of 120 events 4 min apart, a key
     of 3,000 events 31 min apart (every one forwarded), a pair with
-    equal ts (the smaller event_id wins), and a NULL-user key."""
+    equal ts (the smaller event_id wins), a NULL-user key, and NULL-ts
+    rows (forwarded, and never hiding a later row of their key)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -110,6 +115,10 @@ def test_custom_ttl_key_straddling_arrow_chunks(spark, tmp_path):
     rows += [(n + 10 + i, t0 + 10 * i * minute, None, "view") for i in range(5)]
     rows += [(1000 + i, t0 + 31 * i * minute, 3, "click") for i in range(n_long)]
     rows += [(9001, t0, 4, "view"), (9000, t0, 4, "view")]
+    # NULL ts: a key with only that row, and one where it precedes rows
+    # at 0, 10 and 40 min (batch sorts NULL first, pandas sorts NaN last).
+    rows += [(9100, None, 7, "view"), (9101, None, 8, "view")]
+    rows += [(9102 + i, t0 + m * minute, 8, "view") for i, m in enumerate((0, 10, 40))]
     rows.reverse()
     cols = list(zip(*rows))
     table = pa.table(
@@ -139,8 +148,10 @@ def test_custom_ttl_key_straddling_arrow_chunks(spark, tmp_path):
         spark.conf.set(key, prev)
     want = _ttl_reference(rows)
     # every 8th click (32 min), every 3rd view (39 min), null-user views
-    # at 0 and 40 min, every long-key event, the pair's smaller id
-    assert len(want) == 15 + 4 + 2 + n_long + 1 and 9000 in want
+    # at 0 and 40 min, every long-key event, the pair's smaller id, both
+    # NULL-ts rows and key 8 at 0 and 40 min
+    assert len(want) == 15 + 4 + 2 + n_long + 1 + 4 and 9000 in want
+    assert {9100, 9101, 9102, 9104} <= set(want) and 9103 not in want
     assert got["dedup_stream_custom_ttl"] == want
     assert got["dedup_batch_custom_ttl"] == want
 

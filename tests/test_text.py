@@ -4,6 +4,7 @@ live here)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from minefields_kafka_streams_deduplication_spark.functions.neardup import _shingles
@@ -235,6 +236,61 @@ def test_minhash_witness_matches_exact_pairs(spark, monkeypatch):
     assert set(pairs) == {(0, 1), (2, 3), (2, 4), (3, 4)}
     assert pairs[(2, 3)] == pairs[(2, 4)] == pairs[(3, 4)] == 1.0
     assert pairs[(0, 1)] >= 0.7
+
+
+def _brute_jaccard_pairs(texts, threshold):
+    """Every document pair over the uncollapsed corpus sharing a shingle
+    with Jaccard >= threshold, rounded like the queries."""
+    sets = []
+    for t in texts:
+        tok = t.lower().split(" ")
+        sets.append({" ".join(tok[i : i + 3]) for i in range(len(tok) - 2)})
+    out = {}
+    for i in range(len(texts)):
+        for j in range(i + 1, len(texts)):
+            common = len(sets[i] & sets[j])
+            if common and common / len(sets[i] | sets[j]) >= threshold:
+                out[(i, j)] = round(common / len(sets[i] | sets[j]), 4)
+    return out
+
+
+@pytest.mark.parametrize(
+    "name, threshold",
+    [
+        ("dedup_text_ngram_jaccard", 0.8),
+        ("neardup_minhash_verified", 0.7),
+        ("dedup_text_simhash", None),
+    ],
+)
+def test_pair_expansion_over_copy_groups(spark, monkeypatch, name, threshold):
+    """Pairs expanded from reps back to documents: copies of a doc with
+    <3 tokens pair with nothing; a near pair whose groups' ids
+    interleave (reps 0 and 1, copies 6 and 3) yields every cross pair
+    with the smaller id first; a 3-copy group yields its 3 within pairs
+    at Jaccard 1.0 / hamming 0."""
+    from minefields_kafka_streams_deduplication_spark.functions import neardup
+
+    a = " ".join(f"w{i}" for i in range(40))
+    b = a + " tail"  # Jaccard 38/39, simhash hamming 2
+    c = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    short = "hi there"
+    texts = [a, b, c, b, short, c, a, c, short]
+    df = docs_df(spark, texts)
+    monkeypatch.setattr(neardup, "load_table", lambda s, d, n: df)
+    rows = getattr(neardup, name)(spark, "ignored").collect()
+    value = "hamming" if threshold is None else "jaccard"
+    got = {(r.doc_id_1, r.doc_id_2): r[value] for r in rows}
+    assert len(rows) == len(got)
+    cross = {(0, 1), (0, 3), (1, 6), (3, 6)}
+    within = {(0, 6), (1, 3), (2, 5), (2, 7), (5, 7)}
+    assert set(got) == cross | within
+    same = 0 if threshold is None else 1.0
+    assert all(got[p] == same for p in within)
+    assert len({got[p] for p in cross}) == 1
+    if threshold is None:
+        assert got[(0, 1)] <= 3
+    else:
+        assert got == _brute_jaccard_pairs(texts, threshold)
 
 
 def test_neardup_incremental_matches_reference_model(spark):
