@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, round4f
 from ..operators.analytic import _global_row_number
 from ..registry import query
+from .text import copy_reps, rep_bigrams, rep_counts
 
 # ---------------------------------------------------------------------------
 # Corpus / table profiling — the "describe" pass a pipeline runs first.
@@ -414,54 +415,19 @@ def importance_weight_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes no other line of the plan.
     """
     docs = load_table(spark, sf_dir, "documents")
-    # Exact-copy collapse (r8, the r7 doc_*_logprob discipline extended
-    # to DSIR): identical texts carry identical token multisets AND
-    # identical scores, so the token explode runs ONCE over the
-    # DISTINCT-text table — LM counts re-weight by copy count per
-    # language (the target LM is lang-conditioned, so per-(text, lang)
-    # copy weights join back by text hash), and per-doc scores attach
-    # by hash. Un-collapsed + un-pinned this ran the per-copy explode
-    # ~5x (r8 probe: 33.5 → 11.7 s at 1000× on the copy-flood fixture;
-    # the residual cost is the per-copy doc_id hash join — inherent to
-    # a per-doc output).
-    doc_map = docs.select("doc_id", F.md5(F.lower("text")).alias("th"))
-    # ONE corpus aggregate carries both copy weights (r12, guide §2.3/
-    # §2.4): total copies `w` AND target-lang copies `wl` fold in the
-    # same groupBy — the previous separate lang-filtered aggregate was
-    # a second full corpus scan + exchange, and its left join back onto
-    # th_tf a third shuffle, all to attach one conditional count the
-    # first aggregate could carry for free. Values unchanged:
-    # sum(when(lang=target,1)) per th == the old lang-filtered count,
-    # with absent groups 0 == the old coalesce(wl, 0).
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
-        F.sum(
+    # Scored per distinct text (copy_reps). The LM counts weight by copy
+    # count per language: the collapse carries target-lang copies `wl`
+    # next to `w` (r12: one corpus aggregate, where a separate
+    # lang-filtered aggregate cost a second scan + exchange and a third
+    # shuffle to join it back; absent groups sum to 0).
+    doc_map, reps = copy_reps(
+        docs,
+        wl=F.sum(
             F.when(F.col("lang") == DSIR_TARGET_LANG, F.lit(1)).otherwise(F.lit(0))
-        ).alias("wl"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
+        ),
     )
-    # (th, token, c): pinned — feeds the LM counts AND the score join.
-    # r13 audit note (measured and REJECTED, the doc_char_entropy
-    # lesson again): th is unique per rep, so this groupBy(th, token)
-    # looks like a within-row map computable by a per-row sorted
-    # run-length fold — but the aggregate's exchange is ALREADY ELIDED
-    # (reps is hash-partitioned by th; a th-subset partitioning
-    # satisfies the (th, token) clustering), so the swap removes no
-    # shuffle, only trades a codegen double hash-aggregate pass for
-    # interpreted per-element element_at lambdas: interleaved A/B at
-    # sf0.1, subplan-isolated, old 0.33/0.35/0.39 s vs fold
-    # 0.41/0.59/0.64 s — 1.3–1.6× SLOWER. Same verdict applies to the
-    # tfidf_top_terms / doc_unigram_logprob / doc_bigram_logprob
-    # siblings (identical shape over th-partitioned reps).
-    th_tf = (
-        reps.select("th", "w", "wl", F.explode("tk").alias("token"))
-        .groupBy("th", "token")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.max("w").alias("w"),
-            F.max("wl").alias("wl"),
-        )
-        .localCheckpoint(eager=False)
+    th_tf = rep_counts(
+        reps.select("th", "w", "wl", F.explode("tk").alias("token")), "token"
     )
     counts = (
         th_tf.groupBy("token")
@@ -621,23 +587,8 @@ def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab and shuffle-join only the tail.)
     """
     docs = load_table(spark, sf_dir, "documents")
-    # Exact-copy collapse (r7, same as doc_bigram_logprob): the LM
-    # scores the DISTINCT-text table and corpus counts weight each
-    # representative by its copy count — identical model, identical
-    # scores, and the copy-flood no longer pays the explode per copy.
-    doc_map = docs.select("doc_id", F.md5(F.lower("text")).alias("th"))
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
-    )
-    tok = reps.select("th", "w", F.explode("tk").alias("t"))
-    # Pinned (r8 broadcast-reexecution sweep): doc_tf feeds the vocab
-    # aggregate (whose totals ride as a broadcast) AND the per-rep
-    # score join — un-checkpointed, the collapse + explode pipeline
-    # executed ~3x (1000×: 186.2 → 13.4 s, quiet box).
-    doc_tf = tok.groupBy("th", "t").agg(
-        F.count(F.lit(1)).alias("c"), F.max("w").alias("w")
-    ).localCheckpoint(eager=False)
+    doc_map, reps = copy_reps(docs)
+    doc_tf = rep_counts(reps.select("th", "w", F.explode("tk").alias("t")), "t")
     vocab = doc_tf.groupBy("t").agg(
         F.sum(F.col("c") * F.col("w")).alias("cnt")
     ).select(
@@ -730,39 +681,14 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by doc count (same argument as the unigram filter —
     broadcast the head, shuffle the tail at extreme scale)."""
     docs = load_table(spark, sf_dir, "documents")
-    # Exact-copy collapse (r7 copy-flood discipline): identical texts
-    # carry identical bigram multisets AND identical scores, so the LM
-    # fits and scores the DISTINCT-text table; corpus-level counts
-    # weight each representative by its copy count (duplicates still
-    # shape the corpus statistics — collapse changes the execution,
-    # never the model); doc ids re-attach by text hash at the end.
-    # 10x exact-duplicate probe: 61.7 s -> distinct-text cost.
-    doc_map = docs.select("doc_id", F.md5(F.lower("text")).alias("th"))
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
-    )
-    n = F.size("tk")
-    zipped = F.arrays_zip(
-        F.slice("tk", 1, n - 1),
-        F.expr("slice(tk, 2, size(tk) - 1)"),
-    )
-    pairs = (
-        reps.where(n >= 2)
-        .select("th", "w", F.explode(zipped).alias("p"))
-        .select("th", "w", F.col("p.0").alias("w1"), F.col("p.1").alias("w2"))
-    )
-    # Pinned (r8 broadcast-reexecution sweep, same as doc_unigram):
-    # doc_bg feeds corpus_bg -> lefts AND the terms join (3 executions
-    # of the pair explode un-checkpointed); uni feeds the tot broadcast
-    # AND the terms join (2 executions of the token explode).
-    doc_bg = pairs.groupBy("th", "w1", "w2").agg(
-        F.count(F.lit(1)).alias("c"), F.max("w").alias("w")
-    ).localCheckpoint(eager=False)
+    doc_map, reps = copy_reps(docs)
+    doc_bg = rep_counts(rep_bigrams(reps), "w1", "w2")
     corpus_bg = doc_bg.groupBy("w1", "w2").agg(
         F.sum(F.col("c") * F.col("w")).alias("cbg")
     )
     lefts = corpus_bg.groupBy("w1").agg(F.sum("cbg").alias("cl"))
+    # Pinned like doc_bg: uni feeds the tot broadcast AND the terms join
+    # (2 executions of the token explode otherwise).
     uni = (
         reps.select(F.explode("tk").alias("t"), "w")
         .groupBy("t")

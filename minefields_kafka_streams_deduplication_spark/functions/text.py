@@ -302,6 +302,87 @@ def sample_mix_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.filter(coin < threshold).select("doc_id", "lang", "source")
 
 
+# ---------------------------------------------------------------------------
+# Copy-weighted token collapse, shared by the LM and retrieval scorers
+# (tfidf_top_terms, bm25_doc_search, bigram_pmi_top, importance_weight_dsir,
+# doc_unigram_logprob, doc_bigram_logprob).
+# ---------------------------------------------------------------------------
+
+
+def copy_reps(docs: DataFrame, **extra_aggs: Column) -> tuple[DataFrame, DataFrame]:
+    """Exact-copy collapse (the r7/r8 copy-flood discipline): identical
+    lower-cased texts carry identical token multisets AND identical
+    per-text scores, so the token work runs once per DISTINCT text.
+
+    Returns ``(doc_map, reps)``. ``doc_map`` is ``(doc_id, th)`` with
+    ``th = md5(lower(text))``; per-text results re-attach to every copy
+    by joining it on ``th``. ``reps`` is ``(th, w, tk, *extra)``, one row
+    per distinct ``lower(text)``: copy weight ``w = count``, tokens
+    ``tk = split(lower(text), " ")``, plus each ``extra_aggs`` aggregate
+    under its keyword. Corpus statistics weight each rep by its copies
+    (sum of ``w`` per text containing a token is exactly
+    ``countDistinct(doc_id)`` un-collapsed), so duplicates still shape
+    the model: the collapse changes the execution, never the output.
+    Measured: the 10× exact-copy probe of doc_bigram_logprob fell from
+    61.7 s to distinct-text cost; DSIR on the 1000× copy flood from 33.5
+    to 11.7 s, the residual being the per-copy doc_id join that a
+    per-doc output needs anyway."""
+    th = F.md5(F.lower("text")).alias("th")
+    reps = docs.groupBy(th).agg(
+        F.count(F.lit(1)).alias("w"),
+        F.first(F.split(F.lower("text"), " ")).alias("tk"),
+        *[agg.alias(name) for name, agg in extra_aggs.items()],
+    )
+    return docs.select("doc_id", th), reps
+
+
+def rep_counts(rows: DataFrame, *keys: str) -> DataFrame:
+    """``(th, *keys, <weights>)`` rows exploded from ``reps`` → one row per
+    ``(th, *keys)`` with ``c`` = occurrences in that text and ``max`` of
+    every other column (the per-text weights ``w``, ``wl``: constant per
+    ``th``, so max only carries them through).
+
+    Pinned (r8 broadcast-reexecution sweep): every caller reads the
+    result twice, once through a corpus-level aggregate that rides
+    as a broadcast and once in the per-text score join, and
+    un-checkpointed the collapse + explode ran per reader
+    (doc_unigram_logprob at 1000×: 186.2 → 13.4 s; doc_bigram_logprob
+    ran its pair explode 3 times).
+
+    r13 audit (measured and rejected): ``th`` is unique per rep, so this
+    looks like a per-row map, a sorted run-length fold over ``tk``. But
+    the aggregate's exchange is already elided (``reps`` is
+    hash-partitioned by ``th``, which satisfies the ``(th, key)``
+    clustering), so the fold removes no shuffle and only trades a
+    code-generated hash aggregate for interpreted ``element_at`` lambdas:
+    DSIR at sf0.1, subplan-isolated, 0.33/0.35/0.39 s aggregate vs
+    0.41/0.59/0.64 s fold, 1.3–1.6× slower."""
+    carried = [c for c in rows.columns if c not in ("th", *keys)]
+    return (
+        rows.groupBy("th", *keys)
+        .agg(F.count(F.lit(1)).alias("c"), *[F.max(c).alias(c) for c in carried])
+        .localCheckpoint(eager=False)
+    )
+
+
+def rep_bigrams(reps: DataFrame) -> DataFrame:
+    """Adjacent token pairs of each rep, ``(th, w, w1, w2)``, one row per
+    position; reps with fewer than 2 tokens yield none. slice +
+    arrays_zip, NOT a transform() lambda: both are code-generated, while
+    higher-order lambdas are interpreted per element (measured in
+    ``bpe_pair_stats``)."""
+    n = F.size("tk")
+    zipped = F.arrays_zip(
+        F.slice("tk", 1, n - 1),
+        F.expr("slice(tk, 2, size(tk) - 1)"),
+    )
+    return (
+        reps.where(n >= 2)
+        .select("th", "w", F.explode(zipped).alias("p"))
+        .select("th", "w", F.col("p.0").alias("w1"), F.col("p.1").alias("w2"))
+    )
+
+
 TFIDF_TOP_TERMS = 5
 
 
@@ -338,30 +419,14 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulp differences cannot flip the top-k (same policy as cosine)."""
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()
-    # Exact-copy collapse (r8): identical texts have identical tf
-    # vectors AND identical top terms, so scoring runs on the
-    # DISTINCT-text table; df counts every copy as a distinct document
-    # (sum of copy weights per text containing the token — exactly
-    # countDistinct(doc_id) on the un-collapsed frame) and the ranked
-    # terms re-attach per doc_id by text hash. th_tf is pinned: it
-    # feeds the df aggregate (a broadcast subplan, which re-executes
-    # its child) and the scoring join.
-    doc_map = docs.select("doc_id", F.md5(F.lower("text")).alias("th"))
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
-    )
-    th_tf = (
-        reps.select("th", "w", F.explode("tk").alias("token"))
-        .groupBy("th", "token")
-        .agg(F.count("*").alias("tf"), F.max("w").alias("w"))
-        .localCheckpoint(eager=False)
-    )
+    # Scored per distinct text (copy_reps); df counts every copy.
+    doc_map, reps = copy_reps(docs)
+    th_tf = rep_counts(reps.select("th", "w", F.explode("tk").alias("token")), "token")
     df_ = th_tf.groupBy("token").agg(F.sum("w").alias("df"))
     scored = th_tf.join(F.broadcast(df_), "token").select(
         "th",
         "token",
-        (F.col("tf") * F.log((n_docs + 1.0) / (F.col("df") + 1.0))).alias("tfidf"),
+        (F.col("c") * F.log((n_docs + 1.0) / (F.col("df") + 1.0))).alias("tfidf"),
     )
     from pyspark.sql import Window
 
@@ -601,18 +666,13 @@ def bm25_doc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # default) and silently shift n/avgdl; the oracle's explode drops
     # such rows, so drop them before the collapse.
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    # Exact-copy collapse (r8): identical texts have identical dl, tf
-    # and BM25 scores, so the whole scorer runs per DISTINCT text —
-    # corpus stats weight by copy count (n = Σw; avgdl = Σw·dl / Σw
-    # divides the same two exact longs as avg(dl) un-collapsed; df =
-    # Σw per text containing the term == countDistinct(doc_id)), and
-    # scores re-attach by text hash. base is pinned: the scalar-stats
-    # and score branches would each re-run the collapse otherwise.
-    doc_map = docs.select("doc_id", F.md5(F.lower("text")).alias("th"))
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
-    )
+    # Scored per distinct text (copy_reps). Corpus stats weight by copy
+    # count: n = Σw; avgdl = Σw·dl / Σw divides the same two exact longs
+    # as avg(dl) un-collapsed; df = Σw per text containing the term.
+    # base is pinned: the scalar-stats and score branches would each
+    # re-run the collapse otherwise.
+    doc_map, reps = copy_reps(docs)
+
     def tf_col(term: str) -> F.Column:
         # NOTE: the lambda must take exactly ONE parameter — pyspark
         # dispatches a two-parameter lambda to the (element, index)
@@ -1256,28 +1316,14 @@ def bigram_pmi_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_unigram_logprob discipline — a last-ulp libm divergence cannot
     flip a 6-dp value off a tie), and rank ties break on (w1, w2).
 
-    Scale shape: exact-copy collapse first (identical texts contribute
-    identical bigram multisets — the r7 copy-flood discipline: explode
-    the DISTINCT-text table, weight counts by copy count); bigram and
+    Scale shape: exact-copy collapse first (``copy_reps``: explode the
+    DISTINCT-text table, weight counts by copy count); bigram and
     unigram counts are map-side-combined and vocabulary-bounded; the
     support floor prunes BEFORE the vocab joins; totals are 1-row
     broadcasts; the top-k plans TakeOrderedAndProject."""
     docs = load_table(spark, sf_dir, "documents")
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
-    )
-    n = F.size("tk")
-    zipped = F.arrays_zip(
-        F.slice("tk", 1, n - 1),
-        F.expr("slice(tk, 2, size(tk) - 1)"),
-    )
-    pairs = (
-        reps.where(n >= 2)
-        .select("w", F.explode(zipped).alias("p"))
-        .select("w", F.col("p.0").alias("w1"), F.col("p.1").alias("w2"))
-    )
-    cbg = pairs.groupBy("w1", "w2").agg(F.sum("w").alias("c"))
+    _, reps = copy_reps(docs)
+    cbg = rep_bigrams(reps).groupBy("w1", "w2").agg(F.sum("w").alias("c"))
     uni = (
         reps.select(F.explode("tk").alias("t"), "w")
         .groupBy("t")

@@ -651,7 +651,13 @@ def _collapsed_sigs(payloads: DataFrame, batches_fn=phash_batches):
     over representatives only."""
     from pyspark.sql import Window
 
-    sigs = payloads.mapInPandas(batches_fn, "doc_id LONG, phash LONG")
+    # The kernels never emit a NULL phash; the explicit filter matches
+    # the one the optimizer infers below the window on the Hamming-join
+    # branches, so every branch shares one window exchange and the image
+    # synthesis and signature kernels run once per query.
+    sigs = payloads.mapInPandas(batches_fn, "doc_id LONG, phash LONG").where(
+        F.col("phash").isNotNull()
+    )
     flagged = sigs.withColumn(
         "rep_id", F.min("doc_id").over(Window.partitionBy("phash"))
     )

@@ -85,6 +85,17 @@ REVERIFY: tuple[str, ...] = (
     "dedup_text_ngram_jaccard",
     "dedup_text_simhash",
     "doc_novelty_ngrams",
+    # The copy-weighted token collapse now runs shared code.
+    "tfidf_top_terms",
+    "bm25_doc_search",
+    "bigram_pmi_top",
+    "importance_weight_dsir",
+    "doc_unigram_logprob",
+    "doc_bigram_logprob",
+    # The signature frame is filtered once so its kernels run once.
+    "multimodal_phash_dedup_bmp",
+    "multimodal_phash_dct_dedup",
+    "multimodal_phash_keep_first",
 )
 
 

@@ -666,3 +666,57 @@ def test_bigram_pmi_matches_python_reference(spark, monkeypatch):
     assert supports[("fizz", "buzz")] == 12
     assert supports[("red", "blue")] == 10
     assert supports[("buzz", "end")] == 12
+
+
+_COPY_A = "spark hash join alpha beta alpha beta alpha beta spark"
+_COPY_CORPUS = [
+    (0, _COPY_A, "en"),
+    (1, "Alpha beta", "en"),  # case-only variant of doc 5: one text class
+    (2, None, "en"),
+    (3, _COPY_A, "de"),
+    (4, "hash", "de"),  # one token: no bigrams
+    (5, "alpha beta", "de"),
+    (6, _COPY_A, "en"),  # third copy of doc 0, two of them target-lang
+    (7, "gamma join delta spark gamma hash", "de"),
+]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "tfidf_top_terms",
+        "bm25_doc_search",
+        "bigram_pmi_top",
+        "importance_weight_dsir",
+        "doc_unigram_logprob",
+        "doc_bigram_logprob",
+    ],
+)
+def test_copy_weighted_collapse_matches_oracle(spark, monkeypatch, name):
+    """The copy-weighted token collapse against each query's DuckDB oracle
+    on a corpus with real copies: a 3-copy group across two langs, a
+    case-only variant, a NULL text and a 1-token doc. ("alpha", "beta")
+    reaches bigram_pmi_top's support floor only when every copy counts.
+    Rows are compared the way tools/check_strict.py compares them."""
+    import duckdb
+
+    from minefields_kafka_streams_deduplication_spark.functions import pipeline
+    from minefields_kafka_streams_deduplication_spark.functions import text as tx
+    from minefields_kafka_streams_deduplication_spark.registry import ORACLES, QUERIES
+    from tools.check_strict import norm_rows
+
+    rows = [(i, t, lang, "s", len(t or "")) for i, t, lang in _COPY_CORPUS]
+    schema = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+    df = spark.createDataFrame(rows, schema)
+    for mod in (tx, pipeline):
+        monkeypatch.setattr(mod, "load_table", lambda s, d, n: df)
+    sdf = QUERIES[name](spark, "ignored")
+    got = norm_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE documents ({schema})")
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?, ?, ?)", rows)
+    cur = con.execute(ORACLES[name])
+    want = norm_rows([d[0] for d in cur.description], cur.fetchall())
+    assert want
+    assert got == want
